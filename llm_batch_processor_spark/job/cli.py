@@ -48,12 +48,10 @@ def main(argv: list[str] | None = None) -> int:
         print(f"Error: {e}", file=sys.stderr)
         return 1
 
-    from pyspark.sql import functions as F
-
     from ..session import get_spark
     from ..sources.jsonl import ORDER_COL, read_records, to_jsonl_column, write_records
     from .backend import MockChatBackend, OpenAIChatBackend
-    from .pipeline import llm_map
+    from .pipeline import LLMMapResult, llm_map
 
     backend = (
         MockChatBackend()
@@ -87,20 +85,18 @@ def main(argv: list[str] | None = None) -> int:
         # re-execute the nondeterministic inference UDF over every
         # record (2x real LLM calls, and a transiently failing backend
         # could drop a record from BOTH outputs or emit it twice)
-        out = result.df.cache()
+        out = LLMMapResult(result.df.cache())
         try:
-            ok = out.filter(F.col("error").isNull()).drop("error")
-            errs = out.filter(F.col("error").isNotNull())
-
+            ok = out.ok()
             if args.output:
                 write_records(ok, args.output)
             else:
                 for row in to_jsonl_column(ok.orderBy(ORDER_COL)).toLocalIterator():
                     print(row["line"])
-            for row in errs.select("id", "error").toLocalIterator():
+            for row in out.errors().select("id", "error").toLocalIterator():
                 print(f"Error: record id={row['id']}: {row['error']}", file=sys.stderr)
         finally:
-            out.unpersist()
+            out.df.unpersist()
         return 0
     finally:
         spark.stop()

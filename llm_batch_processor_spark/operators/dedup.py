@@ -33,8 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cachereg import register as _reg_cache
-
 # ---------------------------------------------------------------------------
 # exact
 # ---------------------------------------------------------------------------
@@ -161,7 +159,7 @@ def _collapse_exact(df: DataFrame, id_col: str, text_col: str):
         members = base0.select("id", F.col("id").alias("rep"))
         return members, reps, n_rows, False
     w = Window.partitionBy(F.md5(F.col("__txt")))
-    base = _reg_cache(
+    base = (
         base0.withColumn("rep", F.min("id").over(w))
         .withColumn("m", F.count(F.lit(1)).over(w))
         .persist()
@@ -483,7 +481,7 @@ def minhash_pairs_collapsed(
         # scan sigs inside ONE job — a lazy persist races and replays
         # the Arrow band kernel per branch (same defect
         # collapsed_degree_nodes documents)
-        sigs = _reg_cache(sigs.persist())
+        sigs = sigs.persist()
         sigs.count()
     else:
         sigs = _checkpoint(sigs)
@@ -590,7 +588,7 @@ def simhash_pairs(
     # (probe + build) inside one job, and a lazy persist races — each
     # branch replays the tokenize + Arrow vote/pack lineage
     # (ReuseExchange is not guaranteed pre-AQE either)
-    sh = _reg_cache(
+    sh = (
         reps.select("id", simhash_col(F.col("__txt")).alias("sh")).persist()
     )
     sh.count()
@@ -956,7 +954,7 @@ def ngram_jaccard_pairs_collapsed(
     # math, and gram-set equality is hash-choice-invariant);
     # minhash/simhash keep _collapse_exact + the pandas mix because
     # their banded candidate sets depend on byte/hash values.
-    base0 = _reg_cache(
+    base0 = (
         df.select(
             F.col(id_col).alias("id"),
             shingle_hashes_sql(F.col(text_col), n).alias("gh"),
@@ -988,7 +986,7 @@ def ngram_jaccard_pairs_collapsed(
         n_input, collapsed = n_rows, False
     else:
         w = Window.partitionBy(set_key)
-        base = _reg_cache(
+        base = (
             base0.withColumn("rep", F.min("id").over(w))
             .withColumn("m", F.count(F.lit(1)).over(w))
             .persist()
@@ -1088,7 +1086,6 @@ def ngram_jaccard_pairs_collapsed(
         .drop("ordered")
         .persist()
     )
-    per_doc = _reg_cache(per_doc)
     # eager fill: four branches (both posting sides + both verify
     # sides) scan per_doc inside the pair job — a lazy persist races
     # and replays the df-join + per-doc sort lineage per branch
@@ -1200,7 +1197,6 @@ def collapsed_degree_nodes(
                 )
                 .persist()
             )
-            adj = _reg_cache(adj)
         else:
             rp = _checkpoint(rep_pairs.select("id_a", "id_b"))
             adj = (
@@ -1211,7 +1207,6 @@ def collapsed_degree_nodes(
                 .join(surv_m, "h")
                 .persist()
             )
-            adj = _reg_cache(adj)
     else:
         # single-consumer path (degree_distribution reads adj exactly
         # once, inside nodes' lineage): symmetrize with explode — both
@@ -1539,7 +1534,7 @@ def connected_components(
     # that shipped driver_edge_limit+1 rows to the driver even when
     # the graph was over-limit — now the bounded path collects the
     # (cache-resident) edges only once it is known to be bounded.
-    pairs = _reg_cache(pairs.select("id_a", "id_b").persist())
+    pairs = pairs.select("id_a", "id_b").persist()
     n_edges = pairs.count()
     if n_edges <= driver_edge_limit:
         head = pairs.collect()

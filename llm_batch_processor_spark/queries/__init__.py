@@ -40,183 +40,12 @@ class Registry(dict):
         return deco
 
 
-# Driver-check rotation (see CORRECTNESS_LEDGER.md). The driver's
-# correctness gate evaluates ``queries()`` in dict-insertion order and
-# has recorded exactly 50 rows in every round so far, so only the
-# first ~50 entries receive a CORRECTNESS row per round. The emitted
-# order is derived MECHANICALLY from the committed
-# ``CORRECTNESS_r*.json`` artifacts at import time (ADVICE r03:
-# hand-maintained lists drift): queries with no driver row in any
-# artifact come first, then previously-checked queries sorted by the
-# round of their newest row (stalest first — so spare window slots
-# refresh the oldest green rows). A freshly-landed artifact rotates
-# the window automatically; there is no basis list to go stale.
-# Semantics are unaffected — this is pure dict ordering.
-#
-# ``_CHECK_PRIORITY`` below is only the *tie-break preference* within
-# each derived group: cheap queries lead each never-checked block so
-# they absorb the session's cold-start (JVM codegen + Python worker
-# fork) before heavy composites run — dedup_minhash costs 10.6 s on a
-# cold stock session vs ~2 s warm. Unlisted queries keep registration
-# order after the listed block.
-_CHECK_PRIORITY = [
-    # -- round-3 window (driver-checked in CORRECTNESS_r03.json)
-    "text_stats", "lang_filter", "lang_id", "quality_score",
-    "token_count_bpe", "doc_fingerprint", "embed_normalize",
-    "dedup_minhash", "dedup_simhash", "dedup_ngram_jaccard",
-    "dedup_embed_cosine", "sim_topk", "sim_ann_lsh", "sim_ann_ivf",
-    "dedup_incremental", "repetition_ratio", "contamination_ngram",
-    "text_fragments", "pii_redact", "quality_filter", "pipeline_curate",
-    "split_train_val", "tfidf_topk", "sample_stratified",
-    "pack_sequences", "session_window", "tumbling_window",
-    "multimodal_meta", "multimodal_frames", "multimodal_resize",
-    "multimodal_embed", "text_normalize", "corpus_mix",
-    "dedup_clusters", "dedup_paragraph", "shuffle_seeded",
-    "chunk_overlap", "quality_classifier", "dedup_edit_distance",
-    "anonymize_k", "vocab_coverage", "length_filter_pct",
-    "ngram_counts", "retention_cohort", "cooccur_events",
-    "entropy_score", "feature_zscore", "event_transitions",
-    "heavy_hitters", "llm_map_deadletter",
-    # -- round-4 queue: relational extensions (cheap scans/aggs lead)
-    "join_cross", "agg_unpivot", "agg_histogram", "agg_regression",
-    "agg_percentiles", "gap_fill_days", "agg_bitwise",
-    "win_cumulative_distinct", "agg_conditional", "compact_latest",
-    "funnel_steps", "sink_orc", "rollup_time_multi", "win_streaks",
-    "agg_salted_twophase", "join_asof_nearest", "agg_weighted",
-    "scan_schema_merge", "profile_stats", "pareto_frontier",
-    "agg_corr_exact", "win_moving_median", "llm_json_project",
-    # -- round-4 queue: round-3 additions (heavier composites mid-block)
-    "shard_plan_tokens", "dedup_priority_source", "quality_ntile",
-    "events_debounce", "win_fill_forward", "llm_cache_join",
-    "join_bloom_prefilter", "cdc_merge_apply", "scd2_intervals",
-    "embedding_stats_per_label", "dedup_semantic_pipeline",
-    "corpus_mix_temperature", "rarity_score",
-    "embedding_quantize_int8", "json_props_rollup",
-    "attribution_last_touch", "agg_skew_kurt", "win_rolling_anomaly",
-    "lang_confusion", "sample_negatives", "sink_csv_roundtrip",
-    "subquery_correlated", "recursive_cte_chain", "join_lateral_topn",
-    "dedup_incremental_bloom",
-    # -- round-4 additions (never checked; cheap first — the window
-    # boundary falls somewhere in this block)
-    "scan_text", "label_weights", "pct_change_daily",
-    "time_weighted_avg", "bm25_score", "boilerplate_ngram",
-    "sink_parquet_clustered", "degree_distribution",
-    "split_kfold", "agg_gini", "anomaly_iqr", "quality_gopher",
-    "interleave_shards", "conversion_lag", "win_ewma",
-    "compact_binpack", "sparse_cosine_pairs", "graph_pagerank",
-    # -- round-4 additions, second wave (cheap first)
-    "one_hot_encode", "split_grouped", "feature_hashing",
-    "partial_agg_merge", "gaps_islands", "ab_test_proportions",
-    "table_diff", "referential_check", "cohort_ltv",
-    "interpolate_linear", "tokenizer_pair_counts", "rfm_segmentation",
-    "basket_pairs_lift", "perplexity_unigram",
-    # -- round-4 additions, third wave (cheap first)
-    "weighted_sample_det", "seasonality_profile", "robust_scaler",
-    "event_path_topk", "join_interval_overlap", "impute_median",
-    "attribution_linear", "zipf_fit", "survival_km",
-    # -- round-4 additions, fourth wave (cheap first)
-    "zorder_cluster", "join_spatial_grid", "histogram_equidepth",
-    "dedup_containment",
-    # -- round-4 additions, fifth wave (cheap first)
-    "multimodal_dedup_exact", "bigram_nextword", "dedup_url_canonical",
-    "dedup_replay", "sliding_distinct_users", "anomaly_mahalanobis",
-    # -- round-4 additions, sixth wave (cheap first)
-    "source_diversity", "skew_audit", "dedup_normalized",
-    "decayed_engagement", "bigram_xent", "concentration_8020",
-    # -- round-4 additions, seventh wave (cheap first)
-    "embedding_pq_assign", "embedding_silhouette",
-    "embedding_random_projection",
-    # -- round-4 additions, eighth wave (cheap first)
-    "pretokenize_gpt", "join_null_safe", "union_schema_evolve",
-    "sentence_split",
-    # -- round-4 additions, ninth wave (cheap first)
-    "dict_encode", "changepoint_cusum", "rolling_corr_daily",
-    "resample_ohlc", "golden_record", "chi2_independence",
-    "drift_psi", "drift_ks",
-    # -- round-4 additions, tenth wave (cheap first)
-    "blocklist_filter", "topp_per_source", "split_time_leakage",
-    "winsorize_pct", "mutual_info_feature", "skipgram_pairs",
-    "bpe_train_merges",
-    # -- round-4 additions, eleventh wave (cheap first)
-    "readability_score", "autocorrelation", "vocab_overlap_sources",
-    "bootstrap_ci_det",
-    # -- round-4 additions, twelfth wave (cheap first)
-    "weighted_median", "brier_calibration", "feature_variance_audit",
-    "knn_classify",
-    # -- round-4 additions, thirteenth wave (cheap first)
-    "minmax_downsample", "novelty_score", "embedding_power_iteration",
-    # -- round-4 additions, fourteenth wave (cheap first)
-    "rare_category_collapse", "target_encode_loo", "countmin_sketch",
-    "collocations_pmi", "graph_triangles",
-    # -- round-4 additions, fifteenth wave (cheap first)
-    "forecast_mase", "theilsen_trend", "kmeans_step",
-    # -- round-4 additions, sixteenth wave (cheap first)
-    "period_bridge", "simpson_paradox_audit", "benford_audit",
-    # -- round-4 additions, seventeenth wave (cheap first)
-    "feature_lag_matrix", "reconciliation_audit",
-    "attribution_position", "mmr_rerank",
-    # -- round-4 additions, eighteenth wave (cheap first)
-    "lsh_tuning_curve", "extractive_summary", "embedding_analogy",
-    # -- round-4 additions, nineteenth wave (cheap first)
-    "rule_violation_matrix", "lifecycle_stages", "seasonal_decompose",
-    # -- round-4 additions, twentieth wave (cheap first)
-    "quantile_bands_daily", "share_of_parent", "cycle_time_stats",
-    # -- round-4 additions, twenty-first wave (cheap first)
-    "heatmap_dow_hour", "discount_lift", "hhi_concentration",
-    # -- spare-slot preference among previously-checked queries: the
-    # r01-only rows, stalest-first refresh order (VERDICT r03 item 5)
-    "scan_jsonl", "sink_jsonl", "llm_map_mock", "think_strip",
-    "enrich_label", "dedup_exact", "set_except",
-]
-
-
-def _driver_row_rounds() -> dict[str, int]:
-    """query name -> newest round with a committed driver CORRECTNESS
-    row. Reads ``CORRECTNESS_r*.json`` at the repo root (sorted names =
-    chronological rounds); missing/unreadable artifacts are skipped so
-    an installed copy without artifacts degrades to preference order.
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[2]
-    rounds: dict[str, int] = {}
-    for art in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", art.name)
-        if not m:
-            continue
-        try:
-            names = json.loads(art.read_text())
-        except (OSError, ValueError):
-            continue
-        for name in names:
-            rounds[name] = max(rounds.get(name, 0), int(m.group(1)))
-    return rounds
-
-
 def all_queries() -> dict[str, QueryDef]:
-    """Aggregate every query module's registry (import-light).
-
-    Entries are emitted in driver-check order derived from the
-    committed CORRECTNESS artifacts: never-checked queries first, then
-    checked queries stalest-row-first; ``_CHECK_PRIORITY`` breaks ties
-    within each group, registration order after that.
-    """
+    """Aggregate every query module's registry in registration order
+    (``relational``, ``llm``, ``pipeline_ext``)."""
     from . import llm, pipeline_ext, relational
 
     merged: dict[str, QueryDef] = {}
     for mod in (relational, llm, pipeline_ext):
         merged.update(mod.Q)
-    pref = {name: i for i, name in enumerate(_CHECK_PRIORITY)}
-    reg = {name: i for i, name in enumerate(merged)}
-    rows = _driver_row_rounds()
-
-    def key(name: str) -> tuple[int, int, int]:
-        return (
-            rows.get(name, 0),  # 0 = never checked -> first
-            pref.get(name, len(pref)),
-            reg[name],
-        )
-
-    return {name: merged[name] for name in sorted(merged, key=key)}
+    return merged

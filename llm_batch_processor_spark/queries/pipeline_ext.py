@@ -13,8 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.cachereg import register as _reg_cache
-
 from ..functions.text import (
     DUCKDB_FINGERPRINT,
     duckdb_lang_id,
@@ -3735,7 +3733,7 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT unify the two branches (filter pushdown specializes one tf
     # subtree — the perplexity_unigram trap), so without the cache the
     # tf rollup would run twice.
-    post = _reg_cache(tf.join(rare, "tok").persist())
+    post = tf.join(rare, "tok").persist()
     # eager fill: both consumers scan post inside one job; a lazy
     # persist races and replays the tf/df lineage per branch
     post.count()
@@ -3888,7 +3886,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches of the one final job — a lazy persist races and replays
     # the ext aggregation per branch (ADVICE r05; same defect class as
     # the sig kernels)
-    nodes = _reg_cache(nodes.persist())
+    nodes = nodes.persist()
     nodes.count()
     # own-mass as weighted SELF-EDGES (r10): each node's (m-1)*c
     # intra-group mass is exactly an adjacency row (g, g, m_h=m-1), so
@@ -4638,9 +4636,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then group per gram ONCE (the join lands them on g, so the
     # collect needs no new exchange) and the directed pairs are
     # generated row-locally from each <=40-id list instead of the
-    # posting self-join — same bounded pair set, no join machinery,
-    # and no persist + eager-count job (the two consumers share the
-    # g exchange via plan-level exchange reuse).
+    # posting self-join — same bounded pair set, no join machinery.
     sh = sp.select("doc_id", F.explode(F.array_distinct(grams)).alias("g"))
     rare = (
         sh.groupBy("g")
@@ -4656,7 +4652,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 26 s vs the old persisted shape's 4.3 s on 10x data. One cache
     # fill (2 explodes + 1 df rollup in one job) serves sizes and the
     # posting-list rollup.
-    post = _reg_cache(sh.join(rare, "g").persist())
+    post = sh.join(rare, "g").persist()
     # eager fill: sizes + the posting rollup scan post inside one job;
     # a lazy persist races and replays the shingle/df lineage per branch
     post.count()

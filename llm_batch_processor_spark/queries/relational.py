@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.cachereg import register as _reg_cache
-
 from ..tables import load
 from . import Registry
 
@@ -3688,7 +3686,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 104-stage plan. cust is persisted so the probe job fills the
     # cache and the orders rollup runs exactly once; the cumsums then
     # receive their bounds and stay fully lazy until the final action.
-    cust = _reg_cache(
+    cust = (
         cust.withColumn("m_d", F.col("monetary").cast("double")).persist()
     )
     probe = cust.agg(
@@ -6752,6 +6750,11 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grouping()=1 marks the total row -> 'ALL'; a genuine NULL
     # event_type group keeps grouping()=0 and stays NULL, exactly as
     # the old union emitted it.
+    # Known divergence on EMPTY input: Spark's rollup emits no rows at
+    # all (not even the grand total), while the oracle's pooled CTE
+    # still yields one 'ALL' row with NULL n and corr. Unreachable
+    # at any generated scale; a fallback union would cost a second
+    # scan on every non-empty run.
     grouped = fp.rollup("event_type").agg(
         F.grouping("event_type").alias("gid"),
         F.count("*").alias("n"),

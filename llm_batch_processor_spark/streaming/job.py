@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..job.backend import ChatBackend
-from ..job.pipeline import llm_map
+from ..job.pipeline import LLMMapResult, llm_map
 from ..job.spec import JobSpec
 from ..sources.jsonl import parse_record_lines
 
@@ -65,11 +65,9 @@ def run_stream_job(
     def write_batch(batch_df, batch_id: int) -> None:
         good, corrupt = parse_record_lines(batch_df)
         result = llm_map(good, spec, backend)
-        out = result.df.cache()  # one inference pass, two sinks
+        out = LLMMapResult(result.df.cache())  # one inference pass, two sinks
         try:
-            good_out = out.filter("error IS NULL").select(
-                "id", "texts", "images"
-            )
+            good_out = out.ok()
             if exactly_once:
                 (
                     good_out.withColumn("batch_id", F.lit(batch_id))
@@ -81,7 +79,7 @@ def run_stream_job(
             else:
                 good_out.write.mode("append").json(output_path)
             if error_path is not None:
-                infer_errs = out.filter("error IS NOT NULL").select(
+                infer_errs = out.errors().select(
                     F.to_json(F.struct("id", "error")).alias("value")
                 )
                 corrupt_errs = corrupt.select(
@@ -106,7 +104,7 @@ def run_stream_job(
                 else:
                     errs.write.mode("append").text(error_path)
         finally:
-            out.unpersist()
+            out.df.unpersist()
 
     writer = (
         lines.writeStream.foreachBatch(write_batch)

@@ -86,10 +86,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
     """Register all tables as temp views (for spark.sql-built queries)."""
     for n in TABLE_NAMES:

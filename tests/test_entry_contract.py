@@ -23,6 +23,22 @@ def test_oracle_keys_subset_of_queries():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
 
 
+def test_library_registry_order_and_entry_key_set():
+    """The library emits registration order; only ``__spark_entry__``
+    reorders (from the CORRECTNESS artifacts), never adding or
+    dropping a key."""
+    from llm_batch_processor_spark.queries import (
+        all_queries,
+        llm,
+        pipeline_ext,
+        relational,
+    )
+
+    registered = [*relational.Q, *llm.Q, *pipeline_ext.Q]
+    assert list(all_queries()) == registered
+    assert set(E.queries()) == set(registered)
+
+
 def test_every_query_runs_at_smoke_sf(spark):
     # schema resolution + a cheap limit-collect for every registered query
     for name, fn in E.queries().items():

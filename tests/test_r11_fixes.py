@@ -1,7 +1,6 @@
 """Round-11 optimization pins: brute-force query-side cap, NULL-id
-contract restoration, the kernel cache registry's symmetric release,
-and the degree-oriented wedge join's exactness on a hub-skewed graph
-(VERDICT r10 items 3/6/7, ADVICE r10)."""
+contract restoration, and the degree-oriented wedge join's exactness
+on a hub-skewed graph (VERDICT r10 items 3/6, ADVICE r10)."""
 
 from __future__ import annotations
 
@@ -62,33 +61,6 @@ def test_brute_null_ids_dropped_both_sides(spark):
     assert rows  # query 1 scores the non-NULL corpus
     assert all(r["neighbor_id"] is not None for r in rows)
     assert all(r["query_id"] is not None for r in rows)
-
-
-def test_release_kernel_caches_drops_entries(spark):
-    """VERDICT r10 item 7: per-call kernel persists must have a
-    symmetric release — after the consuming action, one call drops
-    every registered entry and the cache manager is empty again."""
-    from llm_batch_processor_spark.operators import cachereg
-    from llm_batch_processor_spark.operators.similarity import (
-        lsh_query_topk,
-    )
-    from llm_batch_processor_spark.tables import load
-
-    # drain anything earlier tests registered, start from a clean slate
-    cachereg.release_kernel_caches()
-    spark.catalog.clearCache()
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    assert cm.isEmpty()
-
-    e = load(spark, SF, "embeddings")
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = lsh_query_topk(e, queries, k=3, dim=64)
-    out.count()
-    assert not cm.isEmpty()  # sig_m is cached while the plan is live
-    assert cachereg.release_kernel_caches() >= 1
-    assert cm.isEmpty()  # symmetric release, no session-lifetime entry
 
 
 def test_triangles_orientation_exact_on_hub_graph(spark, tmp_path):

@@ -66,9 +66,7 @@ def test_driver_check_window_targets_unchecked_queries():
     is derived mechanically from the committed CORRECTNESS artifacts
     (ADVICE r03) — this pins the derivation property, so a
     freshly-landed artifact can never mis-aim the window."""
-    from llm_batch_processor_spark.queries import _driver_row_rounds
-
-    rows = _driver_row_rounds()
+    rows = entry_mod._driver_row_rounds()
     order = list(entry_mod.queries())
     if rows:
         first_checked = min(
