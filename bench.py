@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -79,6 +80,27 @@ def spark_probe_sec(spark, repeat: int = 3) -> float:
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
     return round(best, 4)
+
+
+def run_context(spark, sf_dir: str) -> dict:
+    """What the artifact ran on: the session's master, parallelism and
+    shuffle partitions, the resolved sf directory and the checkout's git
+    HEAD (None outside a git checkout)."""
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=REPO, capture_output=True, text=True, timeout=10
+        )
+        head = out.stdout.strip() if out.returncode == 0 else None
+    except (OSError, subprocess.TimeoutExpired):
+        head = None
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "defaultParallelism": sc.defaultParallelism,
+        "spark.sql.shuffle.partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "sf_dir": os.path.realpath(sf_dir),
+        "git_head": head,
+    }
 
 
 def main() -> int:
@@ -227,6 +249,7 @@ def main() -> int:
                 "gemm_gflops_pre": gflops_pre,
                 "spark_probe_sec_pre": probe_pre,
                 "contended_start": contended_start,
+                "context": run_context(spark, args.sf),
             },
             f,
         )

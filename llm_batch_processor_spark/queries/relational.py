@@ -3042,7 +3042,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_custkey, ROUND(o_totalprice, 2) AS total
@@ -3077,7 +3077,7 @@ def subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
 def recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "documents")
     return spark.sql(
         """
         WITH RECURSIVE anc(node, anc_node, depth) AS (
@@ -3113,7 +3113,7 @@ def recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c.c_custkey, t.o_orderkey, ROUND(t.o_totalprice, 2) AS total

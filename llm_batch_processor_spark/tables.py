@@ -18,14 +18,27 @@ happens in exactly one place:
 
 All derivation is built-in-expression only — the scan stays vectorized
 and columnar, filters/pruning still push down to parquet.
+
+Parquet schema inference costs one Spark job plus a footer read per
+read, so :func:`load` infers each table's schema once per process and
+then reads with ``spark.read.schema(...)``, which fires no job. The
+memo holds only the scanned ``StructType`` (never a DataFrame, so it
+is independent of the session) and is keyed on the real path, each
+data file's ``(inode, size, mtime_ns)`` and the session confs that
+change how parquet types scan (``_SCHEMA_CONFS``). Rewriting a table
+at the same path, or flipping one of those confs, therefore infers
+again. Paths ``os.stat`` cannot see (``s3a://`` and other remote URIs)
+are not memoized and keep the plain inferring read.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import ensure_session_conf
 
@@ -44,12 +57,61 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Session confs that change the schema parquet inference produces.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (realpath, schema conf values) -> (data file signature, StructType).
+# One entry per path: a rewrite replaces the entry instead of adding one.
+# Each entry pairs a signature with the schema read after it, so loads
+# racing on another thread can at worst infer twice, never mismatch.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _file_signature(path: str) -> tuple | None:
+    """``(relpath, inode, size, mtime_ns)`` of the file, or of every file
+    under a directory dataset; None when ``os.stat`` cannot see it."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+        sig = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                full = os.path.join(root, f)
+                fst = os.stat(full)
+                sig.append((os.path.relpath(full, path), fst.st_ino, fst.st_size, fst.st_mtime_ns))
+        return tuple(sig)
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    real = os.path.realpath(path)
+    files = _file_signature(real)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (real, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == files:
+        return spark.read.schema(hit[1]).parquet(path)
+    # the signature was taken BEFORE this read: a rewrite racing it can
+    # only leave a stale signature, which the next load re-infers
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (files, df.schema)
+    return df
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table with canonical column types."""
     ensure_session_conf(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes)["ts"]
         if ts_type.startswith("timestamp"):
@@ -86,7 +148,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register all tables as temp views (for spark.sql-built queries)."""
-    for n in TABLE_NAMES:
-        load(spark, sf_dir, n).createOrReplaceTempView(prefix + n)
+def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+    """Register the named tables (default: all) as temp views, for
+    spark.sql-built queries."""
+    for n in names or TABLE_NAMES:
+        load(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import sys
 from pathlib import Path
 
@@ -18,3 +19,24 @@ def spark():
     spark = get_spark(app_name="pytest", master="local[8]", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh Spark job group and
+    returns ``(result, number of jobs it fired)``, as the status store
+    recorded them once the listener bus has drained."""
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def run(fn):
+        group = f"pytest-jobs-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

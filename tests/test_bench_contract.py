@@ -6,9 +6,13 @@ one-JSON-line contract."""
 from __future__ import annotations
 
 import json
+import os
+import re
 import subprocess
 import sys
 from pathlib import Path
+
+from tests.conftest import SF_SMOKE
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -19,7 +23,7 @@ def test_bench_emits_driver_contract_json():
             sys.executable,
             str(REPO / "bench.py"),
             "--sf",
-            "/root/testdata/sf0.001",
+            SF_SMOKE,
             "--only",
             "scan_parquet,agg_global",
             "--repeat",
@@ -92,3 +96,20 @@ def test_bench_emits_driver_contract_json():
         expected = 2 if name in full["retimed"] else 1
         assert isinstance(execs, list) and len(execs) == expected
         assert min(execs) == full["queries"][name]
+    # ... and the run's own execution context: core count and shuffle
+    # width decide how per-query times compare, so a 4-core and a
+    # 32-core artifact must be told apart from the artifact itself
+    assert "context" not in rec  # the stdout line stays small
+    ctx = full["context"]
+    assert set(ctx) == {
+        "master", "defaultParallelism", "spark.sql.shuffle.partitions", "sf_dir", "git_head"
+    }
+    assert isinstance(ctx["master"], str) and ctx["master"]
+    assert isinstance(ctx["defaultParallelism"], int) and ctx["defaultParallelism"] >= 1
+    assert isinstance(ctx["spark.sql.shuffle.partitions"], int)
+    assert ctx["spark.sql.shuffle.partitions"] >= 1
+    assert ctx["sf_dir"] == os.path.realpath(SF_SMOKE)
+    head = ctx["git_head"]
+    assert head is None or re.fullmatch(r"[0-9a-f]{40}", head), head
+    if (REPO / ".git").exists():
+        assert head is not None

@@ -36,6 +36,31 @@ def _df(qs, name, spark):
     return qs[name].fn(spark, SF)
 
 
+# Upper bound on the Spark jobs a query fires while it is BUILT (before
+# any action), with tables.load's schema memo warm: schema inference is
+# then gone, so what is left are the query's own eager side jobs
+# (persist fills, prechecks). Pinned for the perfbench floor queries;
+# extend it as other queries' side jobs are audited.
+_BUILD_JOB_BUDGET = {
+    "join_lateral_topn": 0,
+    "subquery_correlated": 0,
+    "ab_test_proportions": 0,
+    "date_funcs": 0,
+    "join_broadcast": 0,
+    "rare_category_collapse": 0,
+    "target_encode_loo": 0,
+}
+
+
+def test_warm_build_stays_within_job_budget(spark, qs, count_jobs):
+    fired = {}
+    for name in _BUILD_JOB_BUDGET:
+        _df(qs, name, spark)  # warms the schema memo
+        _, fired[name] = count_jobs(lambda: _df(qs, name, spark))
+    over = {n: j for n, j in fired.items() if j > _BUILD_JOB_BUDGET[n]}
+    assert not over, over
+
+
 def test_filter_pushdown_reaches_parquet(spark, qs):
     df = _df(qs, "filter_pred", spark)
     pf = pushed_filters(df)
