@@ -24,6 +24,20 @@ import tempfile
 USAGE = "Usage: python -m llm_batch_processor_spark.job.cli <job.yml> [--input PATH] [--output PATH]"
 
 
+def _spread(good):
+    """Round-robin ``good`` over ``defaultParallelism`` partitions when its
+    scan has fewer splits than that, so every task slot runs an inference
+    pool; a larger input keeps its splits and is never shuffled.
+
+    ``good`` must be the bare text-scan plan: it has no exchange, so
+    reading its partition count fires no Spark job (on an adaptive plan
+    with an exchange, ``.rdd`` would run the upstream stages)."""
+    slots = good.sparkSession.sparkContext.defaultParallelism
+    if good.rdd.getNumPartitions() < slots:
+        return good.repartition(slots)
+    return good
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(usage=USAGE, add_help=True)
     ap.add_argument("job_yml")
@@ -77,10 +91,12 @@ def main(argv: list[str] | None = None) -> int:
         # directory sink should be
         stdout_mode = not args.output
         good, corrupt = read_records(spark, in_path, keep_order=stdout_mode)
-        for row in corrupt.toLocalIterator():
+        # each toLocalIterator loop runs one job per partition; prefetch
+        # runs the next one while this one prints (two partitions held)
+        for row in corrupt.toLocalIterator(prefetchPartitions=True):
             print(f"Error: skipping malformed JSON line: {row['raw'][:200]}", file=sys.stderr)
 
-        result = llm_map(good, spec, backend)
+        result = llm_map(_spread(good), spec, backend)
         # cache before the ok/errors split: each sink would otherwise
         # re-execute the nondeterministic inference UDF over every
         # record (2x real LLM calls, and a transiently failing backend
@@ -91,9 +107,9 @@ def main(argv: list[str] | None = None) -> int:
             if args.output:
                 write_records(ok, args.output)
             else:
-                for row in to_jsonl_column(ok.orderBy(ORDER_COL)).toLocalIterator():
+                for row in to_jsonl_column(ok.orderBy(ORDER_COL)).toLocalIterator(prefetchPartitions=True):
                     print(row["line"])
-            for row in out.errors().select("id", "error").toLocalIterator():
+            for row in out.errors().select("id", "error").toLocalIterator(prefetchPartitions=True):
                 print(f"Error: record id={row['id']}: {row['error']}", file=sys.stderr)
         finally:
             out.df.unpersist()

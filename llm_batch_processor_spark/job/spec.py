@@ -61,7 +61,10 @@ class JobSpec:
     json_schema_filepath: str | None = None
     # engine extensions (absent from the reference, safe defaults):
     request_timeout: float = 240.0  # reference: lib/job_processor.rb:64
-    concurrency: int = 8  # per-Arrow-batch in-flight requests (reference: 1)
+    # in-flight requests per Arrow batch (reference: 1); a job keeps task
+    # slots x concurrency requests in flight, and the CLI spreads an input
+    # with fewer scan splits than task slots over every slot
+    concurrency: int = 8
     max_retries: int = 2
     erb_source: str | None = None
     system_erb_source: str | None = None

@@ -8,10 +8,14 @@ import hashlib
 import json
 import subprocess
 import sys
+from pathlib import Path
 
+from pyspark.sql import functions as F
+
+from llm_batch_processor_spark.job.cli import _spread
 from llm_batch_processor_spark.sources.jsonl import read_records
 
-REPO = "/root/repo"
+REPO = str(Path(__file__).resolve().parent.parent)
 
 
 def test_read_records_contract(spark, tmp_path):
@@ -31,6 +35,40 @@ def test_read_records_contract(spark, tmp_path):
     assert g["b"]["texts"] == {} and g["b"]["images"] == []
     bad = corrupt.collect()
     assert len(bad) == 1 and "invalid" in bad[0]["raw"]
+
+
+def _write_records(path, ids):
+    path.write_text(
+        "".join(json.dumps({"id": i, "texts": {"input": i}}) + "\n" for i in ids),
+        encoding="utf-8",
+    )
+
+
+def test_spread_one_split_input_over_every_slot(spark, count_jobs, tmp_path):
+    # one file is one scan split: the spread round-robins it over every
+    # task slot, and deciding so fires no Spark job
+    p = tmp_path / "in.jsonl"
+    ids = [f"r{i:02d}" for i in range(24)]
+    _write_records(p, ids)
+    good, _ = read_records(spark, str(p))
+    slots = spark.sparkContext.defaultParallelism
+    assert good.rdd.getNumPartitions() == 1 < slots
+    spread, jobs = count_jobs(lambda: _spread(good))
+    assert jobs == 0
+    parts = spread.select(F.spark_partition_id().alias("p")).distinct().collect()
+    assert sorted(r["p"] for r in parts) == list(range(slots))
+    assert sorted(r["id"] for r in spread.collect()) == ids
+
+
+def test_spread_leaves_input_with_enough_splits_unshuffled(spark, tmp_path):
+    slots = spark.sparkContext.defaultParallelism
+    for f in range(slots):
+        _write_records(tmp_path / f"part-{f}.jsonl", [f"f{f}-{i}" for i in range(3)])
+    good, _ = read_records(spark, str(tmp_path))
+    assert good.rdd.getNumPartitions() >= slots
+    spread = _spread(good)
+    assert spread.rdd.getNumPartitions() == good.rdd.getNumPartitions()
+    assert "Exchange" not in spread._jdf.queryExecution().executedPlan().toString()
 
 
 def test_cli_end_to_end(tmp_path):

@@ -129,8 +129,9 @@ def test_selfcheck_canon_digest_properties():
     semantics for dtype mismatches."""
     import pandas as pd
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from tools.selfcheck import canon_digest
 
     a = pd.DataFrame({"x": [1, 2, 3], "y": [1.5, float("nan"), -2.0]})

@@ -28,9 +28,13 @@ server-side)."""
 from __future__ import annotations
 
 import json
+import subprocess
+import sys
 import threading
 import time
+from collections import Counter
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from pathlib import Path
 
 import pytest
 
@@ -398,6 +402,43 @@ def test_llm_map_batch_requests_overlap_to_concurrency(spark, stub):
     assert spans[4][0] >= min(left for _, left in spans[:4]), spans
     assert wall >= 2 * latency  # can't beat two waves of latency
     assert wall < 16 * latency, f"hang: wall={wall:.2f}s"
+
+
+def test_cli_spreads_one_split_input_over_every_task_slot(stub, tmp_path):
+    """The CLI's in-flight requests are task slots x concurrency even for
+    an input of one scan split: 12 records in one file, local[2] and
+    concurrency 1 put two requests in service at once (server-recorded
+    intervals, not wall time), and every prompt is still sent once."""
+    state, base = stub
+    state.reset(lambda body, n: (200, _ok("k"), 0.4))
+    tmpl = tmp_path / "t.j2"
+    tmpl.write_text("Say: {{ texts['input'] }}", encoding="utf-8")
+    job = tmp_path / "job.yml"
+    job.write_text(
+        f"id: spread\nerb_filepath: {tmpl}\nbackend_endpoint: {base}\n"
+        "model: m-stub\noutput_label: resp\nconcurrency: 1\nmax_retries: 0\n",
+        encoding="utf-8",
+    )
+    inp = tmp_path / "in.jsonl"
+    inp.write_text(
+        "".join(
+            json.dumps({"id": f"r{i:02d}", "texts": {"input": f"p{i}"}}) + "\n"
+            for i in range(12)
+        ),
+        encoding="utf-8",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-m", "llm_batch_processor_spark.job.cli", str(job),
+         "--input", str(inp), "--master", "local[2]"],
+        capture_output=True, text=True, timeout=300,
+        cwd=Path(__file__).resolve().parent.parent,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    got = [json.loads(l)["id"] for l in proc.stdout.splitlines() if l.strip()]
+    assert got == [f"r{i:02d}" for i in range(12)]
+    sent = Counter(r["prompt"] for r in state.snapshot())
+    assert sent == Counter(f"Say: p{i}" for i in range(12))
+    assert state.max_inflight == 2, state.spans
 
 
 def test_backend_raises_typed_rate_limit_with_retry_after(stub):
