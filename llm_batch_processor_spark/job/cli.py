@@ -10,8 +10,11 @@ Contract parity (bin/job.rb:6-24, spec/bin_job_spec.rb):
   skipped, exit 0;
 - JSONL in (stdin by default) -> JSONL out (stdout by default).
 
-stdout mode streams via toLocalIterator (constant driver memory); with
-``--output`` the write is a fully distributed ``df.write.json``.
+The job is one ``pipeline.infer_once`` pass: ok records go to stdout (or
+``--output``), then one loop reports every error row, malformed lines
+and failed records alike, to stderr. stdout mode streams via
+toLocalIterator (constant driver memory); with ``--output`` the write is
+a fully distributed ``df.write.json``.
 """
 
 from __future__ import annotations
@@ -65,7 +68,7 @@ def main(argv: list[str] | None = None) -> int:
     from ..session import get_spark
     from ..sources.jsonl import ORDER_COL, read_records, to_jsonl_column, write_records
     from .backend import MockChatBackend, OpenAIChatBackend
-    from .pipeline import LLMMapResult, llm_map
+    from .pipeline import infer_once
 
     backend = (
         MockChatBackend()
@@ -91,28 +94,20 @@ def main(argv: list[str] | None = None) -> int:
         # directory sink should be
         stdout_mode = not args.output
         good, corrupt = read_records(spark, in_path, keep_order=stdout_mode)
-        # each toLocalIterator loop runs one job per partition; prefetch
-        # runs the next one while this one prints (two partitions held)
-        for row in corrupt.toLocalIterator(prefetchPartitions=True):
-            print(f"Error: skipping malformed JSON line: {row['raw'][:200]}", file=sys.stderr)
-
-        result = llm_map(_spread(good), spec, backend)
-        # cache before the ok/errors split: each sink would otherwise
-        # re-execute the nondeterministic inference UDF over every
-        # record (2x real LLM calls, and a transiently failing backend
-        # could drop a record from BOTH outputs or emit it twice)
-        out = LLMMapResult(result.df.cache())
-        try:
+        with infer_once(_spread(good), corrupt, spec, backend) as out:
             ok = out.ok()
             if args.output:
                 write_records(ok, args.output)
             else:
+                # each toLocalIterator loop runs one job per partition;
+                # prefetch runs the next one while this one prints
                 for row in to_jsonl_column(ok.orderBy(ORDER_COL)).toLocalIterator(prefetchPartitions=True):
                     print(row["line"])
-            for row in out.errors().select("id", "error").toLocalIterator(prefetchPartitions=True):
-                print(f"Error: record id={row['id']}: {row['error']}", file=sys.stderr)
-        finally:
-            out.df.unpersist()
+            for row in out.errors().select("id", "error", "raw").toLocalIterator(prefetchPartitions=True):
+                if row["raw"] is not None:
+                    print(f"Error: skipping malformed JSON line: {row['raw'][:200]}", file=sys.stderr)
+                else:
+                    print(f"Error: record id={row['id']}: {row['error']}", file=sys.stderr)
         return 0
     finally:
         spark.stop()

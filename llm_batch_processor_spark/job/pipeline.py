@@ -11,6 +11,7 @@ Spark-first re-expression:
       -> think-strip via built-in regexp_replace + regex trim      [A9]
       -> enrich via map_concat(texts, map(output_label, response)) [A10]
       -> ok()/errors() split (dead-letter routing)                 [A3]
+Both drivers (CLI, streaming job) run this as one ``infer_once`` pass.
 
 Only the render+chat kernel is Python (it is inherently so — it calls
 an external HTTP service); everything before and after stays in
@@ -26,8 +27,9 @@ endpoint fails fast per batch after bounded retries.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -116,10 +118,12 @@ def _call_one(
 class LLMMapResult:
     """The enriched output plus its dead-letter branch."""
 
-    df: DataFrame  # id, texts (enriched), images, error
+    # id, texts (enriched), images, error; infer_once adds raw (the
+    # corrupt input line, null on every parsed record)
+    df: DataFrame
 
     def ok(self) -> DataFrame:
-        return self.df.filter(F.col("error").isNull()).drop("error")
+        return self.df.filter(F.col("error").isNull()).drop("error", "raw")
 
     def errors(self) -> DataFrame:
         return self.df.filter(F.col("error").isNotNull())
@@ -209,6 +213,32 @@ def llm_map(records: DataFrame, spec: JobSpec, backend: ChatBackend) -> LLMMapRe
         )
     )
     return LLMMapResult(df=enriched)
+
+
+@contextmanager
+def infer_once(
+    good: DataFrame, corrupt: DataFrame, spec: JobSpec, backend: ChatBackend
+) -> Iterator[LLMMapResult]:
+    """Every input line's outcome in one table, cached for the block.
+
+    ``(good, corrupt)`` is ``parse_record_lines``' pair; corrupt lines
+    join llm_map's output as error rows (``id`` null, ``raw`` kept), so
+    each line lands in exactly one of ``ok()`` / ``errors()``. Cached
+    because each sink would otherwise re-execute the nondeterministic
+    inference UDF (2x real LLM calls, and a transiently failing backend
+    could drop a record from BOTH sinks or emit it twice)."""
+    corrupt_rows = corrupt.select(
+        F.concat(F.lit("corrupt record: "), "raw").alias("error"), "raw"
+    )
+    df = (
+        llm_map(good, spec, backend)
+        .df.unionByName(corrupt_rows, allowMissingColumns=True)
+        .cache()
+    )
+    try:
+        yield LLMMapResult(df)
+    finally:
+        df.unpersist()
 
 
 def enrich(texts: Column, label: str, value: Column) -> Column:

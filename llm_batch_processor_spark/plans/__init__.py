@@ -14,7 +14,6 @@ from .introspect import (
     broadcast_join_count,
     formatted_plan,
     has_take_ordered,
-    partial_agg_count,
     partition_filters,
     pushed_filters,
     read_schemas,
@@ -32,7 +31,6 @@ __all__ = [
     "shuffle_count",
     "broadcast_hint_count",
     "broadcast_join_count",
-    "partial_agg_count",
     "has_take_ordered",
     "single_partition_window_count",
     "whole_stage_codegen_count",

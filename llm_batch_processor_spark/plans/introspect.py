@@ -82,12 +82,6 @@ def broadcast_hint_count(df: DataFrame) -> int:
     return len(re.findall(r"ResolvedHint.*broadcast", analyzed, re.IGNORECASE))
 
 
-def partial_agg_count(df: DataFrame) -> int:
-    """Map-side (partial) aggregate functions — evidence of pre-shuffle
-    combine (``partial_sum``, ``partial_count``, ... in the plan)."""
-    return len(re.findall(r"\bpartial_\w+", formatted_plan(df)))
-
-
 def has_take_ordered(df: DataFrame) -> bool:
     """True when ORDER BY + LIMIT fused into TakeOrderedAndProject
     (no global sort — each partition keeps k, driver merges)."""

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import duckdb_think_strip, think_strip
+from ..operators.dedup import _spread
 from ..tables import load
 from . import Registry
 
@@ -34,12 +35,8 @@ def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size inference batches upstream (pipeline.py contract): the test
     # table is a single parquet split, which would serialize the whole
     # corpus through one Python worker; conversely one partition per
-    # core at check scale schedules 32 workers for ~16 rows each. Same
-    # row-count sizing rule as operators.dedup._spread.
-    n = d.count()
-    target = min(spark.sparkContext.defaultParallelism, max(1, -(-n // 256)))
-    if target > 1:
-        d = d.repartition(target)
+    # core at check scale schedules 32 workers for ~16 rows each
+    d = _spread(d, d.count())
     return d.select(
         F.col("doc_id").cast("string").alias("id"),
         F.create_map(F.lit("content"), F.col("text")).alias("texts"),
@@ -143,9 +140,7 @@ def llm_map_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..job.spec import JobSpec
 
     d = load(spark, sf_dir, "documents")
-    n = d.count()
-    target = min(spark.sparkContext.defaultParallelism, max(1, -(-n // 256)))
-    recs = d.select(
+    recs = _spread(d, d.count()).select(
         F.col("doc_id").cast("string").alias("id"),
         F.create_map(
             F.lit("content"),
@@ -155,8 +150,6 @@ def llm_map_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("texts"),
         F.array().cast("array<string>").alias("images"),
     )
-    if target > 1:
-        recs = recs.repartition(target)
     spec = JobSpec.from_dict(
         {
             "id": "mock-deadletter",

@@ -8,7 +8,6 @@ Streaming is the Spark-native generalization: the SAME DataFrame plan
 source with exactly-once file sinks and checkpointed state.
 
 Modules:
-- ``source``  — streaming JSONL record source (A1/A2 under readStream)
 - ``job``     — the A4-A10 LLM map as a streaming job (file in/out)
 - ``windows`` — watermarked tumbling + session windows over events
 - ``stateful``— custom stateful sessionizer via applyInPandasWithState
@@ -17,11 +16,9 @@ Modules:
 
 from .dedup import dedup_stream, dedup_stream_against_corpus
 from .job import run_stream_job
-from .source import read_record_stream
 from .windows import session_counts_stream, tumbling_counts_stream
 
 __all__ = [
-    "read_record_stream",
     "run_stream_job",
     "tumbling_counts_stream",
     "session_counts_stream",

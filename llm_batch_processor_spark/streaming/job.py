@@ -3,14 +3,15 @@
 ``llm_map`` is already stream-safe: pandas_udf + map_concat +
 regexp_replace are all stateless row transforms, so the identical plan
 runs under readStream. This module adds the query wiring: file source,
-exactly-once JSONL file sink, checkpointing, and dead-letter routing via
-``foreachBatch`` (a streaming query has one sink; foreachBatch lets one
-micro-batch fan out to main + error sinks transactionally per batch).
+exactly-once JSONL file sink, checkpointing, and ``foreachBatch`` (a
+streaming query has one sink; foreachBatch lets one micro-batch fan out
+to main + error sinks per batch).
 
-The stream carries RAW lines and parses inside each micro-batch so both
-failure classes reach the dead-letter sink, matching the reference's
-stderr routing (corrupt JSON: bin_job_spec.rb:140-153; per-record API
-errors: :128-137) — the job never dies on data.
+The stream carries RAW lines; each micro-batch runs the same
+``pipeline.infer_once`` pass as the CLI, whose one table holds both
+failure classes, so both reach the dead-letter sink, matching the
+reference's stderr routing (corrupt JSON: bin_job_spec.rb:140-153;
+per-record API errors: :128-137) — the job never dies on data.
 
 Continuous parity note: the reference emits each record as soon as it is
 processed (stdout flush per line). The streaming job emits per
@@ -24,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..job.backend import ChatBackend
-from ..job.pipeline import LLMMapResult, llm_map
+from ..job.pipeline import infer_once
 from ..job.spec import JobSpec
 from ..sources.jsonl import parse_record_lines
 
@@ -63,48 +64,21 @@ def run_stream_job(
     lines = reader.load(input_path)
 
     def write_batch(batch_df, batch_id: int) -> None:
-        good, corrupt = parse_record_lines(batch_df)
-        result = llm_map(good, spec, backend)
-        out = LLMMapResult(result.df.cache())  # one inference pass, two sinks
-        try:
-            good_out = out.ok()
+        def write(df):
             if exactly_once:
-                (
-                    good_out.withColumn("batch_id", F.lit(batch_id))
+                return (
+                    df.withColumn("batch_id", F.lit(batch_id))
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
-                    .json(output_path)
                 )
-            else:
-                good_out.write.mode("append").json(output_path)
+            return df.write.mode("append")
+
+        with infer_once(*parse_record_lines(batch_df), spec, backend) as out:
+            write(out.ok()).json(output_path)
             if error_path is not None:
-                infer_errs = out.errors().select(
-                    F.to_json(F.struct("id", "error")).alias("value")
-                )
-                corrupt_errs = corrupt.select(
-                    F.to_json(
-                        F.struct(
-                            F.lit(None).cast("string").alias("id"),
-                            F.concat(F.lit("corrupt record: "), F.col("raw")).alias(
-                                "error"
-                            ),
-                        )
-                    ).alias("value")
-                )
-                errs = infer_errs.unionAll(corrupt_errs)
-                if exactly_once:
-                    (
-                        errs.withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("batch_id")
-                        .text(error_path)
-                    )
-                else:
-                    errs.write.mode("append").text(error_path)
-        finally:
-            out.df.unpersist()
+                errs = out.errors().select(F.to_json(F.struct("id", "error")).alias("value"))
+                write(errs).text(error_path)
 
     writer = (
         lines.writeStream.foreachBatch(write_batch)

@@ -15,8 +15,9 @@ from llm_batch_processor_spark.job.backend import (
     IntrospectingBackend,
     MockChatBackend,
 )
-from llm_batch_processor_spark.job.pipeline import RECORD_SCHEMA, llm_map
+from llm_batch_processor_spark.job.pipeline import RECORD_SCHEMA, infer_once, llm_map
 from llm_batch_processor_spark.job.spec import JobSpec
+from llm_batch_processor_spark.sources.jsonl import parse_record_lines
 
 
 def _spec(**over):
@@ -147,3 +148,45 @@ def test_quality_gate_queries_survive_punctuation(spark, tmp_path):
     assert got_qf == {("en", True): 1, ("en", False): 2}
     got_pc = qs["pipeline_curate"].fn(spark, str(tmp_path)).collect()
     assert sum(r["n_docs"] for r in got_pc) == 1
+
+
+def test_infer_once_routes_every_line_once_and_caches_for_the_block(spark):
+    """One table holds every non-blank line's outcome: parsed records
+    that succeed in ok(), backend failures and corrupt lines in errors(),
+    each exactly once; the table is cached only inside the block."""
+    lines = [
+        json.dumps({"id": "g1", "texts": {"input": "one"}}),
+        json.dumps({"id": "f1", "texts": {"input": "FAILME two"}}),
+        "{not json",
+        "   ",
+        json.dumps({"id": "g2", "texts": {"input": "three"}}),
+        '["an", "array"]',
+        "",
+    ]
+    good, corrupt = parse_record_lines(
+        spark.createDataFrame([(l,) for l in lines], "value string")
+    )
+    with infer_once(
+        good, corrupt, _spec(max_retries=0), MockChatBackend(fail_marker="FAILME")
+    ) as out:
+        lvl = out.df.storageLevel
+        assert lvl.useMemory or lvl.useDisk
+        ok = out.ok()
+        assert "error" not in ok.columns and "raw" not in ok.columns
+        ok_rows = ok.collect()
+        err_rows = out.errors().collect()
+    lvl = out.df.storageLevel
+    assert not (lvl.useMemory or lvl.useDisk)
+
+    assert sorted(r["id"] for r in ok_rows) == ["g1", "g2"]
+    assert all("resp" in r["texts"] for r in ok_rows)
+    failed = [r for r in err_rows if r["raw"] is None]
+    assert [r["id"] for r in failed] == ["f1"]
+    assert "RuntimeError" in failed[0]["error"]
+    bad = sorted((r for r in err_rows if r["raw"] is not None), key=lambda r: r["raw"])
+    assert [r["raw"] for r in bad] == ['["an", "array"]', "{not json"]
+    for r in bad:
+        assert r["id"] is None
+        assert r["error"] == "corrupt record: " + r["raw"]
+    # 5 non-blank lines, each in exactly one sink
+    assert len(ok_rows) + len(err_rows) == 5

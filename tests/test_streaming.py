@@ -96,6 +96,70 @@ def test_stream_job_matches_batch_and_routes_errors(spark, tmp_path):
     assert any("corrupt record" in e["error"] for e in err_lines)
 
 
+def test_stream_job_lands_every_line_exactly_once(spark, tmp_path):
+    """Backend failures and corrupt lines in the same micro-batches: the
+    error sink holds one row per failing record and one per corrupt
+    line, and the ok sink holds every other record."""
+    inp, out, errs, ckpt = (
+        tmp_path / "in",
+        tmp_path / "out",
+        tmp_path / "errs",
+        tmp_path / "ckpt",
+    )
+    inp.mkdir()
+    good = [f"g{i}" for i in range(5)]
+    failing = ["f0", "f1", "f2"]
+
+    def rec(i, text):
+        return json.dumps({"id": i, "texts": {"input": text}})
+
+    (inp / "a.jsonl").write_text(
+        "\n".join([rec("g0", "a"), rec("f0", "FAILME x"), "{bad one", rec("g1", "b")])
+        + "\n\n"
+    )
+    (inp / "b.jsonl").write_text(
+        "\n".join(
+            [rec("f1", "FAILME y"), rec("g2", "c"), '{"id": "bad two"', rec("g3", "d"),
+             rec("f2", "FAILME z"), rec("g4", "e"), "[1, 2]"]
+        )
+        + "\n"
+    )
+    spec = JobSpec.from_dict(
+        dict(
+            id="once",
+            erb_source="Say: {{ texts['input'] }}",
+            backend_endpoint="mock://x",
+            model="m1",
+            output_label="resp",
+            max_retries=0,
+        )
+    )
+    q = run_stream_job(
+        spark,
+        spec,
+        str(inp),
+        str(out),
+        str(ckpt),
+        MockChatBackend(fail_marker="FAILME"),
+        error_path=str(errs),
+        max_files_per_trigger=1,
+    )
+    _await(q)
+
+    ok_ids = [r["id"] for r in spark.read.json(str(out)).collect()]
+    assert sorted(ok_ids) == good
+    err_rows = [json.loads(r["value"]) for r in spark.read.text(str(errs)).collect()]
+    failed = sorted(e["id"] for e in err_rows if "id" in e)
+    assert failed == failing
+    assert all("RuntimeError" in e["error"] for e in err_rows if "id" in e)
+    corrupt = sorted(e["error"] for e in err_rows if "id" not in e)
+    assert corrupt == [
+        'corrupt record: [1, 2]',
+        'corrupt record: {"id": "bad two"',
+        "corrupt record: {bad one",
+    ]
+
+
 def _write_events(path, rows):
     path.mkdir(exist_ok=True)
     name = f"{len(list(path.iterdir())):03d}.json"

@@ -28,6 +28,7 @@ server-side)."""
 from __future__ import annotations
 
 import json
+import re
 import subprocess
 import sys
 import threading
@@ -439,6 +440,64 @@ def test_cli_spreads_one_split_input_over_every_task_slot(stub, tmp_path):
     sent = Counter(r["prompt"] for r in state.snapshot())
     assert sent == Counter(f"Say: p{i}" for i in range(12))
     assert state.max_inflight == 2, state.spans
+
+
+def test_cli_lands_every_line_exactly_once_across_sinks(stub, tmp_path):
+    """One CLI run mixing good records, records the backend always fails
+    and corrupt lines: every id lands in exactly one of the --output part
+    files, a dead-letter line or a malformed-line message, and each
+    prompt is sent once plus max_retries retries when it fails."""
+    state, base = stub
+
+    def script(body, n_prior):
+        if "dead" in _user_prompt(body):
+            return (500, {"error": "always down"}, 0.0)
+        return (200, _ok("fine"), 0.0)
+
+    state.reset(script)
+    tmpl = tmp_path / "t.j2"
+    tmpl.write_text("Say: {{ texts['input'] }}", encoding="utf-8")
+    job = tmp_path / "job.yml"
+    job.write_text(
+        f"id: once\nerb_filepath: {tmpl}\nbackend_endpoint: {base}\n"
+        "model: m-stub\noutput_label: resp\nmax_retries: 1\n",
+        encoding="utf-8",
+    )
+    good = [f"g{i}" for i in range(6)]
+    dead = [f"d{i}" for i in range(3)]
+    corrupt = [f"c{i}" for i in range(2)]
+    lines = [json.dumps({"id": i, "texts": {"input": f"ok {i}"}}) for i in good]
+    lines += [json.dumps({"id": i, "texts": {"input": f"dead {i}"}}) for i in dead]
+    lines.insert(3, '{"id": "c0", "texts": {"input": ')
+    lines.insert(5, "")
+    lines.append('{"id": "c1" oops}')
+    inp = tmp_path / "in.jsonl"
+    inp.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    out_dir = tmp_path / "out"
+    proc = subprocess.run(
+        [sys.executable, "-m", "llm_batch_processor_spark.job.cli", str(job),
+         "--input", str(inp), "--output", str(out_dir), "--master", "local[2]"],
+        capture_output=True, text=True, timeout=300,
+        cwd=Path(__file__).resolve().parent.parent,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    landed_ok = [
+        json.loads(l)["id"]
+        for part in out_dir.glob("part-*")
+        for l in part.read_text(encoding="utf-8").splitlines()
+        if l.strip()
+    ]
+    landed_dead = re.findall(r"^Error: record id=(\S+): ", proc.stderr, re.M)
+    landed_corrupt = re.findall(
+        r'^Error: skipping malformed JSON line: \{"id": "([^"]+)"', proc.stderr, re.M
+    )
+    assert sorted(landed_ok) == good
+    assert sorted(landed_dead) == dead
+    assert sorted(landed_corrupt) == corrupt
+    sent = Counter(r["prompt"] for r in state.snapshot())
+    want = Counter({f"Say: ok {i}": 1 for i in good})
+    want.update({f"Say: dead {i}": 2 for i in dead})
+    assert sent == want
 
 
 def test_backend_raises_typed_rate_limit_with_retry_after(stub):
