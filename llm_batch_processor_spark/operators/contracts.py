@@ -11,8 +11,10 @@ jaccard when a is two texts). No engine can answer an ill-posed
 query; the scalable posture is to validate the key contract at the
 pipeline boundary, quarantine violations, and keep the operators
 assumption-free-fast. Since r8 the keyed-entity queries are
-SELF-DEFENDING: each invokes :func:`require_unique` at entry
-(queries/pipeline_ext.py `_load_keyed`), so on a duplicate-key
+SELF-DEFENDING: each loads its table with
+``tables.load(..., unique=(key,))``, which invokes
+:func:`require_unique` once per table snapshot (passes are memoized
+beside the table's schema), so on a duplicate-key
 corpus they fail typed with :class:`KeyContractError` instead of
 returning an underdetermined answer — pinned per-query by
 tests/test_dupkeys_contract.py and as a matrix row by

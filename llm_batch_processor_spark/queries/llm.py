@@ -14,7 +14,6 @@ rows-only check the driver would otherwise record.
 
 from __future__ import annotations
 
-import tempfile
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +23,7 @@ from ..functions.text import duckdb_think_strip, think_strip
 from ..operators.dedup import _spread
 from ..tables import load
 from . import Registry
+from .relational import _tmp_dir
 
 Q = Registry()
 
@@ -232,11 +232,6 @@ def enrich_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("texts", "content").alias("content"),
         F.element_at("texts", "label").alias("label"),
     )
-
-
-def _tmp_dir(name: str, sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"llm_bps_{name}_{tag}")
 
 
 @Q.add(

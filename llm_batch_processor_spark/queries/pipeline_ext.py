@@ -28,89 +28,6 @@ from . import Registry
 Q = Registry()
 
 
-# (applicationId, normalized table path, snapshot fingerprint, key
-# tuple) quadruples whose uniqueness contract already PASSED in this
-# process — the production semantics is "validate once per ingested
-# snapshot", so repeat query calls over the same table skip the gate
-# job (26 -> 2 jobs across a full bench session). Only SUCCESS is
-# memoized: a violating corpus re-checks (and re-raises typed) on
-# every call. The fingerprint (file count + max mtime + total bytes,
-# one os.stat pass — no data read) makes "snapshot" OBSERVED rather
-# than assumed (VERDICT r8 item 6): rewriting the files under an
-# already-validated path within one session changes the token, so the
-# gate re-validates instead of silently trusting the stale pass.
-_KEY_CONTRACT_OK: set[tuple] = set()
-
-
-def _snapshot_fingerprint(path: str) -> tuple:
-    """Cheap content-staleness token for a parquet table path: for a
-    single file its (mtime_ns, size); for a directory the (leaf-file
-    count, max leaf mtime_ns, total leaf size) over a FULL os.walk —
-    not just direct children, because a partitioned table rewrites
-    leaves under nested ``key=value/`` subdirs without moving the
-    parent dir's mtime or entry set (ADVICE r9). Any in-place leaf
-    rewrite moves its own mtime forward, so the memo token changes
-    even when byte counts collide; cost is metadata-only."""
-    import os as _os
-
-    try:
-        st = _os.stat(path)
-        if not _os.path.isdir(path):
-            return (st.st_mtime_ns, st.st_size)
-        stats = [
-            _os.stat(_os.path.join(root, f))
-            for root, _dirs, files in _os.walk(path)
-            for f in files
-        ]
-        return (
-            len(stats),
-            max((s.st_mtime_ns for s in stats), default=st.st_mtime_ns),
-            sum(s.st_size for s in stats),
-        )
-    except OSError:
-        # unreadable path: never memoize (the load itself will raise
-        # a real error if the table is actually gone)
-        return ("unstat-able", id(object()))
-
-
-def _load_keyed(
-    spark: SparkSession, sf_dir: str, table: str, key_cols: tuple[str, ...]
-) -> DataFrame:
-    """Load ``table`` with the keyed-ENTITY entry gate (VERDICT r7
-    item 2): PQ codebooks, kNN neighbor identity and the near-dup
-    pair/graph queries are semantically underdetermined when one id
-    names two payloads ("pair (a, b)" has no single jaccard when a is
-    two texts), so instead of diverging silently on a duplicate-key
-    corpus they fail TYPED at query entry with
-    :class:`KeyContractError` and a bounded violation sample. Cost:
-    one key-column-only scan + map-side-combined count per distinct
-    (session, table-snapshot, key) — the same precheck a 100 TB
-    ingest runs once at the pipeline boundary. "Snapshot" is observed,
-    not assumed: the memo token carries a metadata fingerprint of the
-    table files (:func:`_snapshot_fingerprint`), so an in-place
-    rewrite under an already-validated path re-validates on the next
-    call instead of silently reusing the stale pass (VERDICT r8
-    item 6). The selfcheck/robustness harness records the typed
-    failure as its own outcome class (`contract`), distinct from a
-    wrong answer."""
-    import os as _os
-
-    from ..operators.contracts import require_unique
-
-    df = load(spark, sf_dir, table)
-    path = _os.path.normpath(_os.path.join(sf_dir, f"{table}.parquet"))
-    token = (
-        spark.sparkContext.applicationId,
-        path,
-        _snapshot_fingerprint(path),
-        key_cols,
-    )
-    if token not in _KEY_CONTRACT_OK:
-        require_unique(df, list(key_cols))
-        _KEY_CONTRACT_OK.add(token)
-    return df
-
-
 def _nsq(col: str = "embedding") -> str:
     """SQL: squared L2 norm of a vector, NULL-ELEMENT-SAFE.
 
@@ -169,7 +86,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components, minhash_pairs_collapsed
 
-    d = _load_keyed(spark, sf_dir, "documents", ("doc_id",))
+    d = load(spark, sf_dir, "documents", unique=("doc_id",))
     # collapsed form (r5 skew audit): CC runs on the exact-dedup
     # REPRESENTATIVE graph and labels expand through the id->rep map —
     # a boilerplate clique contributes one node instead of a quadratic
@@ -201,7 +118,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_pairs
 
-    d = _load_keyed(spark, sf_dir, "documents", ("doc_id",))
+    d = load(spark, sf_dir, "documents", unique=("doc_id",))
     return simhash_pairs(d, max_hamming=16)
 
 
@@ -235,7 +152,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import ngram_jaccard_pairs
 
-    d = _load_keyed(spark, sf_dir, "documents", ("doc_id",))
+    d = load(spark, sf_dir, "documents", unique=("doc_id",))
     pairs = ngram_jaccard_pairs(d, n=2, min_jaccard=0.2)
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
@@ -310,7 +227,7 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import lsh_bucket_topk
 
-    e = _load_keyed(spark, sf_dir, "embeddings", ("vec_id",))
+    e = load(spark, sf_dir, "embeddings", unique=("vec_id",))
     return lsh_bucket_topk(e, k=5, n_planes=6, seed=42)
 
 
@@ -323,7 +240,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_topk
 
-    e = _load_keyed(spark, sf_dir, "embeddings", ("vec_id",))
+    e = load(spark, sf_dir, "embeddings", unique=("vec_id",))
     return ivf_topk(e, k=5, n_cells=16, n_probe=2, seed=42, dim=64)
 
 
@@ -355,7 +272,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import lsh_query_topk
 
-    e = _load_keyed(spark, sf_dir, "embeddings", ("vec_id",))
+    e = load(spark, sf_dir, "embeddings", unique=("vec_id",))
     queries = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -396,7 +313,7 @@ def sim_ann_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_topk
 
-    e = _load_keyed(spark, sf_dir, "embeddings", ("vec_id",))
+    e = load(spark, sf_dir, "embeddings", unique=("vec_id",))
     # the all-pairs kernel computes every query's top-k; the graded
     # slice is the 100-query subset (per-query results are independent,
     # so the filter cannot change a surviving row — and it keeps the
@@ -607,7 +524,7 @@ def _recall_df(approx: DataFrame, exact: DataFrame) -> DataFrame:
 def sim_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import brute_force_topk, lsh_query_topk
 
-    e = _load_keyed(spark, sf_dir, "embeddings", ("vec_id",))
+    e = load(spark, sf_dir, "embeddings", unique=("vec_id",))
     queries = e.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -676,7 +593,7 @@ def sim_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.similarity import brute_force_topk, ivf_topk
 
-    e = _load_keyed(spark, sf_dir, "embeddings", ("vec_id",))
+    e = load(spark, sf_dir, "embeddings", unique=("vec_id",))
     # query_pred replaces the old post-filter on query_id (r10): the
     # declared metric only ranks the 100 query vectors, so the probe
     # cogroup no longer ships/scores the other ~95% of the corpus as
@@ -1705,7 +1622,7 @@ def corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components, ngram_jaccard_pairs_collapsed
 
-    d = _load_keyed(spark, sf_dir, "documents", ("doc_id",))
+    d = load(spark, sf_dir, "documents", unique=("doc_id",))
     # collapsed form (r5 skew audit): CC runs on the exact-dedup
     # REPRESENTATIVE graph (a boilerplate clique is one node, not a
     # quadratic intra-pair set) and labels expand through the id->rep
@@ -3449,7 +3366,7 @@ def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ngram_jaccard_pairs_collapsed,
     )
 
-    d = _load_keyed(spark, sf_dir, "documents", ("doc_id",))
+    d = load(spark, sf_dir, "documents", unique=("doc_id",))
     rep_pairs, _members, surv, _collapsed = ngram_jaccard_pairs_collapsed(
         d, n=2, min_jaccard=0.2
     )
@@ -3865,7 +3782,7 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import ngram_jaccard_pairs_collapsed
 
-    d = _load_keyed(spark, sf_dir, "documents", ("doc_id",))
+    d = load(spark, sf_dir, "documents", unique=("doc_id",))
     # collapsed iteration (r5 skew audit): members of a group of
     # identical texts have IDENTICAL neighborhoods, hence identical
     # ranks at every step — so the fixed-point runs on the rep graph
@@ -5200,7 +5117,7 @@ def embedding_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returns the FIRST NaN index and would assign every such row —
     # or, for a corrupt CENTROID, every row in the corpus — to an
     # arbitrary code). Mirrored in the oracle's emb64 CTE (r7).
-    emb = _load_keyed(spark, sf_dir, "embeddings", ("vec_id",)).filter(
+    emb = load(spark, sf_dir, "embeddings", unique=("vec_id",)).filter(
         (F.size("embedding") == 64)
         & F.expr(
             "aggregate(embedding, true,"
@@ -6287,7 +6204,7 @@ def vocab_overlap_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import candidate_topk
 
-    e = _load_keyed(spark, sf_dir, "embeddings", ("vec_id",))
+    e = load(spark, sf_dir, "embeddings", unique=("vec_id",))
     train = e.filter(F.col("vec_id") >= 50)
     queries = e.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -6933,7 +6850,7 @@ def countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import _checkpoint, ngram_jaccard_pairs_collapsed
 
-    d = _load_keyed(spark, sf_dir, "documents", ("doc_id",))
+    d = load(spark, sf_dir, "documents", unique=("doc_id",))
     rep_pairs, members, surv, _collapsed = ngram_jaccard_pairs_collapsed(d, n=2, min_jaccard=0.2)
     # eager checkpoint, not lazy persist: FIVE branches (both nbr
     # orientations + e1/e2/e3) scan edges inside one job — lazy-persist

@@ -69,9 +69,10 @@ def get_spark(
 ) -> SparkSession:
     """Build a local session tuned for this machine; cluster-safe defaults.
 
-    AQE stays on (runtime coalesce + skew-join split), shuffle partitions
-    default to 2x local cores (on a real cluster, leave AQE to coalesce),
-    Arrow transfer on for the pandas_udf paths.
+    Shuffle partitions default to 2x local cores (on a real cluster,
+    leave AQE to coalesce); AQE (runtime coalesce + skew-join split) and
+    Arrow transfer for the pandas_udf paths come from
+    :func:`ensure_session_conf`, like on any other session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -83,10 +84,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")

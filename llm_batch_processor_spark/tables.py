@@ -22,13 +22,19 @@ and columnar, filters/pruning still push down to parquet.
 Parquet schema inference costs one Spark job plus a footer read per
 read, so :func:`load` infers each table's schema once per process and
 then reads with ``spark.read.schema(...)``, which fires no job. The
-memo holds only the scanned ``StructType`` (never a DataFrame, so it
-is independent of the session) and is keyed on the real path, each
-data file's ``(inode, size, mtime_ns)`` and the session confs that
-change how parquet types scan (``_SCHEMA_CONFS``). Rewriting a table
-at the same path, or flipping one of those confs, therefore infers
-again. Paths ``os.stat`` cannot see (``s3a://`` and other remote URIs)
-are not memoized and keep the plain inferring read.
+same memo entry records the key contracts the snapshot has passed:
+``load(..., unique=("doc_id",))`` runs
+:func:`~.operators.contracts.require_unique` (one key-column scan)
+once per snapshot and raises :class:`~.operators.contracts.KeyContractError`
+on every call over a violating one. The memo holds only the scanned
+``StructType`` and the passed key tuples (never a DataFrame, so it is
+independent of the session) and is keyed on the real path, each data
+file's ``(inode, size, mtime_ns)`` and the session confs that change
+how parquet types scan (``_SCHEMA_CONFS``). Rewriting a table at the
+same path, or flipping one of those confs, therefore infers the schema
+and checks the keys again. Paths ``os.stat`` cannot see (``s3a://``
+and other remote URIs) are not memoized: they keep the plain inferring
+read and check their keys on every call.
 """
 
 from __future__ import annotations
@@ -40,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .operators.contracts import require_unique
 from .session import ensure_session_conf
 
 TABLE_NAMES = (
@@ -66,11 +73,14 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-# (realpath, schema conf values) -> (data file signature, StructType).
-# One entry per path: a rewrite replaces the entry instead of adding one.
-# Each entry pairs a signature with the schema read after it, so loads
-# racing on another thread can at worst infer twice, never mismatch.
-_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+# (realpath, schema conf values) ->
+#     (data file signature, StructType, key tuples that passed require_unique).
+# One entry per path: a rewrite replaces the entry instead of adding one,
+# dropping its passed keys with it. Each entry pairs a signature with the
+# schema read and the keys checked after it, so loads racing a rewrite or
+# another thread can at worst infer or check twice, never serve a schema
+# or a pass to a snapshot it was not taken from.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType, frozenset]] = {}
 
 
 def _file_signature(path: str) -> tuple | None:
@@ -92,26 +102,36 @@ def _file_signature(path: str) -> tuple | None:
         return None
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def _read_parquet(spark: SparkSession, path: str, unique: tuple[str, ...]) -> DataFrame:
     real = os.path.realpath(path)
     files = _file_signature(real)
-    if files is None:
-        return spark.read.parquet(path)
     key = (real, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
-    hit = _SCHEMAS.get(key)
+    hit = _SCHEMAS.get(key) if files is not None else None
     if hit is not None and hit[0] == files:
-        return spark.read.schema(hit[1]).parquet(path)
-    # the signature was taken BEFORE this read: a rewrite racing it can
-    # only leave a stale signature, which the next load re-infers
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = (files, df.schema)
+        _, schema, passed = hit
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema, passed = df.schema, frozenset()
+    if unique and unique not in passed:
+        require_unique(df, list(unique))  # raises: only a pass is recorded
+        passed |= {unique}
+    if files is not None:
+        # the signature was taken BEFORE this read and check: a rewrite
+        # racing them can only leave a stale signature, which the next
+        # load re-infers and re-checks
+        _SCHEMAS[key] = (files, schema, passed)
     return df
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table with canonical column types."""
+def load(
+    spark: SparkSession, sf_dir: str, name: str, unique: tuple[str, ...] = ()
+) -> DataFrame:
+    """Load one testdata table with canonical column types; with
+    ``unique``, first require those key columns to be unique (once per
+    table snapshot)."""
     ensure_session_conf(spark)
-    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"), tuple(unique))
     if name == "events":
         ts_type = dict(df.dtypes)["ts"]
         if ts_type.startswith("timestamp"):

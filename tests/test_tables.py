@@ -27,6 +27,12 @@ def test_warm_load_fires_no_spark_job(spark, count_jobs, tmp_path):
     assert cold_jobs >= 1
     assert warm_jobs == 0
     assert warm.schema == cold.schema
+    # a keyed load checks its key once per snapshot, then is job-free too
+    sf = _fresh_copy(tmp_path, "documents")
+    _, cold_jobs = count_jobs(lambda: load(spark, sf, "documents", unique=("doc_id",)))
+    _, warm_jobs = count_jobs(lambda: load(spark, sf, "documents", unique=("doc_id",)))
+    assert cold_jobs >= 1
+    assert warm_jobs == 0
 
 
 def test_rewrite_at_same_path_infers_again(spark, tmp_path):
