@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .similarity import _id_dtype, _unit_rows
+
 # ---------------------------------------------------------------------------
 # exact
 # ---------------------------------------------------------------------------
@@ -649,6 +651,56 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _block_pairs(
+    rows: DataFrame, n_rows: int, block_size: int, max_blocks: int
+) -> DataFrame:
+    """Every unordered pair of row blocks, one pair per task: the plan
+    of the blocked all-pairs kernels (:func:`_dense_jaccard_pairs`,
+    :func:`embedding_pairs`). Returns (ba, bb, rows_a, rows_b) for each
+    block pair ba <= bb; ``rows_*`` are arrays of structs of all the
+    columns of ``rows``, which must carry an ``id`` column. A row's
+    block is ``pmod(xxhash64(id), n_blocks)``.
+
+    Block-count CAP (r9, found by the sf10 ladder probe): every block
+    ships to every pair task, so total shuffle = n_blocks x corpus
+    bytes — a fixed block SIZE makes n_blocks (and the shuffle) grow
+    linearly with the corpus and the block-pair count quadratically
+    (at 500k docs / block 1024: 489 blocks, ~120k tasks, ~380 GB
+    shuffle — the sf10 run filled the disk). So n_blocks is
+    ceil(n_rows / block_size) capped at ``max_blocks``, each caller's
+    measured bound: shuffle stays <= max_blocks x corpus and tasks
+    <= max_blocks^2/2. block_size stays the FLOOR (small corpora keep
+    small tasks).
+
+    ONE pair row per task: each row carries two whole blocks (tens of
+    MB at the block-count cap), and the join's default partitioning
+    leaves several rows per task — each concurrent Python worker then
+    materializes a multi-row Arrow batch with ~10x unpack
+    amplification, which global-OOM-killed the first sf10 ladder run.
+    One row per task caps the per-worker peak at one block pair.
+    """
+    n_blocks = max(1, min(math.ceil(n_rows / block_size), max_blocks))
+    packed = (
+        rows.select(
+            F.pmod(F.xxhash64("id"), F.lit(n_blocks)).alias("b"),
+            F.struct(*rows.columns).alias("r"),
+        )
+        .groupBy("b")
+        .agg(F.collect_list("r").alias("rows"))
+    )
+    return (
+        packed.alias("A")
+        .join(packed.alias("B"), F.col("A.b") <= F.col("B.b"))
+        .select(
+            F.col("A.b").alias("ba"),
+            F.col("B.b").alias("bb"),
+            F.col("A.rows").alias("rows_a"),
+            F.col("B.rows").alias("rows_b"),
+        )
+        .repartition(n_blocks * (n_blocks + 1) // 2)
+    )
+
+
 def _dense_jaccard_pairs(
     sets_df: DataFrame, vocab: np.ndarray, t: float, id_dtype: str, block_size: int, n_docs: int
 ) -> DataFrame:
@@ -682,44 +734,11 @@ def _dense_jaccard_pairs(
       df^2 blowup), one matrix multiply per block pair is cheaper;
       the worst case therefore never regresses past the old kernel.
 
-    Block-count CAP (r9, found by the sf10 ladder probe): every block
-    ships to every pair task, so total shuffle = n_blocks x corpus
-    bytes — a fixed block SIZE makes n_blocks (and the shuffle) grow
-    linearly with the corpus and the block-pair count quadratically
-    (at 500k docs / block 1024: 489 blocks, ~120k tasks, ~380 GB
-    shuffle — the sf10 run filled the disk). Capping n_blocks at 24
-    bounds shuffle at 24x corpus and still yields 300 tasks; per-task
-    memory is 2/24 of the posting arrays, which fits any executor that
-    could hold the 1024-doc blocks before. block_size stays the FLOOR
-    (small corpora keep small tasks).
+    Blocks come from :func:`_block_pairs`, capped at 24 (at 500k docs
+    that bounds shuffle at 24x corpus, 300 tasks, and per-task memory
+    at 2/24 of the posting arrays).
     """
-    n_blocks = max(1, min(math.ceil(n_docs / block_size), 24))
-    packed = (
-        sets_df.select(
-            F.pmod(F.xxhash64("id"), F.lit(n_blocks)).alias("b"),
-            F.struct("id", "m", "gh").alias("r"),
-        )
-        .groupBy("b")
-        .agg(F.collect_list("r").alias("rows"))
-    )
-    block_pairs = (
-        packed.alias("A")
-        .join(packed.alias("B"), F.col("A.b") <= F.col("B.b"))
-        .select(
-            F.col("A.b").alias("ba"),
-            F.col("B.b").alias("bb"),
-            F.col("A.rows").alias("rows_a"),
-            F.col("B.rows").alias("rows_b"),
-        )
-        # ONE pair row per task: each row carries two whole blocks
-        # (tens of MB at the block-count cap), and the join's default
-        # partitioning leaves several rows per task — each concurrent
-        # Python worker then materializes a multi-row Arrow batch with
-        # ~10x unpack amplification, which global-OOM-killed the first
-        # sf10 ladder run. One row per task caps the per-worker peak
-        # at one block pair.
-        .repartition(n_blocks * (n_blocks + 1) // 2)
-    )
+    block_pairs = _block_pairs(sets_df, n_docs, block_size, 24)
 
     V = len(vocab)
 
@@ -1008,9 +1027,7 @@ def ngram_jaccard_pairs_collapsed(
     # cached gram sets — the raw text is never rescanned
     sets_df = sets_src.select("id", "m", "gh").filter(F.size("gh") > 0)
     n_docs = max(1, int(n_input))
-    id_dtype = [
-        f.dataType.simpleString() for f in df.schema.fields if f.name == id_col
-    ][0]
+    id_dtype = _id_dtype(df, id_col)
 
     # strategy gate (r9, rewritten after the sf10 ladder probe; r10:
     # probe and vocabulary collapsed into ONE job): the old gate keyed
@@ -1348,10 +1365,8 @@ def _verify_cosine_pairs(
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.array(pdf["__va"].tolist(), dtype=np.float64)
-            B = np.array(pdf["__vb"].tolist(), dtype=np.float64)
-            A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-            B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)
+            A = _unit_rows(np.array(pdf["__va"].tolist(), dtype=np.float64))
+            B = _unit_rows(np.array(pdf["__vb"].tolist(), dtype=np.float64))
             sims = np.einsum("ij,ij->i", A, B)
             m = sims >= thresh
             if m.any():
@@ -1411,45 +1426,23 @@ def embedding_pairs(
     n = df.count()
     if strategy == "auto":
         strategy = "brute" if n <= brute_force_limit else "lsh"
-    id_dtype_s = [
-        f.dataType.simpleString() for f in df.schema.fields if f.name == id_col
-    ][0]
+    id_dtype = _id_dtype(df, id_col)
     if strategy == "lsh":
         cand = _hyperplane_candidates(df, id_col, vec_col, n_tables, n_planes, seed)
         return _verify_cosine_pairs(
-            cand, df, float(min_cosine), id_col, vec_col, id_dtype_s
+            cand, df, float(min_cosine), id_col, vec_col, id_dtype
         )
-    # block-count cap (r9, sf10 ladder — same rationale as the jaccard
-    # kernel): shuffle = n_blocks x corpus and tasks = n_blocks^2/2, so
-    # a fixed block SIZE turns a 200k-vector corpus into 196 blocks and
-    # ~19k tasks; the cap bounds both while the row-chunked GEMM below
-    # keeps per-task memory flat regardless of block width
-    n_blocks = max(1, min(math.ceil(n / block_size), 32))
-
-    packed = (
+    # cap 32 (r9, sf10 ladder): a 200k-vector corpus would otherwise
+    # be 196 blocks and ~19k tasks; the row-chunked GEMM below keeps
+    # per-task memory flat regardless of block width
+    block_pairs = _block_pairs(
         df.select(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("b"),
             F.col(id_col).alias("id"),
             F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .groupBy("b")
-        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
-    )
-    block_pairs = (
-        packed.alias("A")
-        .join(packed.alias("B"), F.col("A.b") <= F.col("B.b"))
-        .select(
-            F.col("A.b").alias("ba"),
-            F.col("B.b").alias("bb"),
-            F.col("A.rows").alias("rows_a"),
-            F.col("B.rows").alias("rows_b"),
-        )
-        # one pair row per task — same Arrow-batch peak-memory bound
-        # as the jaccard kernel (see _dense_jaccard_pairs)
-        .repartition(n_blocks * (n_blocks + 1) // 2)
+        ),
+        n, block_size, 32,
     )
     thresh = float(min_cosine)
-    id_dtype = id_dtype_s
 
     def score_blocks(batches):
         for pdf in batches:
@@ -1459,10 +1452,8 @@ def embedding_pairs(
             ):
                 ids_a = np.array([r["id"] for r in rows_a])
                 ids_b = np.array([r["id"] for r in rows_b])
-                A = np.array([r["v"] for r in rows_a], dtype=np.float64)
-                B = np.array([r["v"] for r in rows_b], dtype=np.float64)
-                A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-                B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)
+                A = _unit_rows(np.array([r["v"] for r in rows_a], dtype=np.float64))
+                B = _unit_rows(np.array([r["v"] for r in rows_b], dtype=np.float64))
                 # GEMM in A-row CHUNKS (r9, sf10 ladder): the capped
                 # block count makes blocks thousands of vectors wide,
                 # and a full nA x nB f64 sims buffer would be hundreds

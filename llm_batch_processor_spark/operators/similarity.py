@@ -1,6 +1,7 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Two strategies, per the scale playbook:
+Three kernels, per the scale playbook. Each returns
+(query_id, neighbor_id, rank) with ties broken on neighbor_id:
 
 - :func:`brute_force_topk` — exact cosine top-k. The query side rides
   the task closures as one float64 matrix (bounded: a top-k request is
@@ -11,12 +12,21 @@ Two strategies, per the scale playbook:
   n_partitions x n_queries x k rows. This is the 100 TB baseline when
   the query set is small.
 
-- :func:`lsh_bucket_topk` — approximate: random-hyperplane (SimHash
+- :func:`lsh_query_topk` — approximate: random-hyperplane (SimHash
   for vectors) bucketing with deterministic planes (seeded numpy,
-  broadcast as literals), then exact rerank *within* buckets.
-  Collisions drop recall, never precision. The bucket join is an
-  equi-join on the signature — shuffle is proportional to bucket
-  sizes, not n². ``n_planes`` trades recall for bucket size.
+  broadcast as literals), multiprobe within Hamming distance
+  ``n_flip``, then exact rerank *within* buckets. Collisions drop
+  recall, never precision; the bucket join is an equi-join on the
+  signature, so shuffle is proportional to bucket sizes, not n².
+  ``queries=None`` is the all-pairs form: the corpus probes itself.
+
+- :func:`ivf_topk` — approximate all-pairs: a seeded coarse quantizer
+  (IVF cells), ``n_probe`` nearest cells per query, exact rerank
+  inside the probed cells.
+
+Every in-block score is :func:`_block_topk` and every global rank is
+:func:`_rank_topk`, so all kernels share one numpy order and one
+(sim desc, id asc) tie-break.
 """
 
 from __future__ import annotations
@@ -110,8 +120,8 @@ def brute_force_topk(
     # global top-k row is top-k within its own partition under the
     # same (sim desc, id asc) total order. Ranks are the declared
     # output, and numpy's sum order is already the graded fp precedent
-    # (_grouped_topk scores sim_ann_lsh_exact's oracle-hash-checked
-    # ranks the same way).
+    # (_block_topk scores sim_ann_lsh_exact's oracle-hash-checked
+    # buckets too).
     q_rows = (
         queries.select(
             F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__q")
@@ -131,8 +141,7 @@ def brute_force_topk(
             [], f"query_id {id_dtype}, neighbor_id {id_dtype}, rank int"
         )
     qids = np.array([r["query_id"] for r in q_rows])
-    Q = np.array([r["__q"] for r in q_rows], dtype=np.float64)
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
+    Q = _unit_rows(np.array([r["__q"] for r in q_rows], dtype=np.float64))
 
     corpus = vectors.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
@@ -142,38 +151,67 @@ def brute_force_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            nids = pdf["neighbor_id"].values
             V = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            S = Q @ V.T
-            out_q, out_n, out_s = [], [], []
-            for i in range(len(qids)):
-                mask = nids != qids[i]
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                order = np.lexsort((nids[idx], -S[i, idx]))[:k]
-                sel = idx[order]
-                out_q.append(np.full(len(sel), qids[i]))
-                out_n.append(nids[sel])
-                out_s.append(S[i, sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "__sim": np.concatenate(out_s),
-                    }
-                )
+            top = _block_topk(qids, Q, pdf["neighbor_id"].values, _unit_rows(V), k)
+            if len(top):
+                yield top
 
-    part_topk = corpus.mapInPandas(
-        score, f"query_id {id_dtype}, neighbor_id {id_dtype}, __sim double"
+    part_topk = corpus.mapInPandas(score, _cand_schema(id_dtype))
+    return _rank_topk(part_topk, k)
+
+
+def _unit_rows(X: np.ndarray) -> np.ndarray:
+    """Scale each row of ``X`` to unit L2 norm, in place."""
+    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
+    return X
+
+
+_NO_CANDS = {"query_id": [], "neighbor_id": [], "__sim": []}
+
+
+def _block_topk(
+    qids: np.ndarray, Q: np.ndarray, nids: np.ndarray, V: np.ndarray, k: int
+) -> pd.DataFrame:
+    """The top-k of one block: unit query rows ``Q`` against unit
+    member rows ``V`` with one GEMM, self-ids masked, each query's rows
+    ordered (sim desc, id asc). Returns (query_id, neighbor_id, __sim),
+    at most k rows per query."""
+    S = Q @ V.T
+    out_q, out_n, out_s = [], [], []
+    for i in range(len(qids)):
+        mask = nids != qids[i]
+        idx = np.nonzero(mask)[0]
+        if len(idx) == 0:
+            continue
+        order = np.lexsort((nids[idx], -S[i, idx]))[:k]
+        sel = idx[order]
+        out_q.append(np.full(len(sel), qids[i]))
+        out_n.append(nids[sel])
+        out_s.append(S[i, sel])
+    if not out_q:
+        return pd.DataFrame(_NO_CANDS)
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(out_q),
+            "neighbor_id": np.concatenate(out_n),
+            "__sim": np.concatenate(out_s),
+        }
     )
+
+
+def _cand_schema(id_dtype: str) -> str:
+    return f"query_id {id_dtype}, neighbor_id {id_dtype}, __sim double"
+
+
+def _rank_topk(cands: DataFrame, k: int) -> DataFrame:
+    """Global top-k over per-block candidates (query_id, neighbor_id,
+    __sim): exact whenever every global top-k row is top-k within its
+    own block under the same (sim desc, id asc) order."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("__sim").desc(), F.col("neighbor_id").asc()
     )
     return (
-        part_topk.withColumn("rank", F.row_number().over(w))
+        cands.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank")
     )
@@ -199,55 +237,23 @@ def _grouped_topk(
     (multi-table LSH) so the window doesn't rank duplicates."""
 
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "__sim": []})
         if len(left) == 0 or len(right) == 0:
-            return empty
+            return pd.DataFrame(_NO_CANDS)
         Q = np.array(left["__q"].tolist(), dtype=np.float64)
         V = np.array(right["__v"].tolist(), dtype=np.float64)
-        Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-        V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-        S = Q @ V.T
-        qids = left["query_id"].values
-        nids = right["neighbor_id"].values
-        out_q, out_n, out_s = [], [], []
-        for i in range(len(qids)):
-            mask = nids != qids[i]
-            idx = np.nonzero(mask)[0]
-            if len(idx) == 0:
-                continue
-            svals = S[i, idx]
-            order = np.lexsort((nids[idx], -svals))[:k]  # sim desc, id asc
-            sel = idx[order]
-            out_q.append(np.full(len(sel), qids[i]))
-            out_n.append(nids[sel])
-            out_s.append(S[i, sel])
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "__sim": np.concatenate(out_s),
-            }
+        return _block_topk(
+            left["query_id"].values, _unit_rows(Q),
+            right["neighbor_id"].values, _unit_rows(V), k,
         )
 
     per_bucket = (
         queries.groupBy("bucket")
         .cogroup(members.groupBy("bucket"))
-        .applyInPandas(
-            score, f"query_id {id_dtype}, neighbor_id {id_dtype}, __sim double"
-        )
+        .applyInPandas(score, _cand_schema(id_dtype))
     )
     if dedup_pairs:
         per_bucket = per_bucket.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        per_bucket.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(per_bucket, k)
 
 
 def _id_dtype(df: DataFrame, id_col: str) -> str:
@@ -437,7 +443,7 @@ def _ivf_probe_topk(
 
 def lsh_query_topk(
     vectors: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | None,
     k: int,
     n_planes: int = 8,
     n_flip: int = 2,
@@ -452,7 +458,9 @@ def lsh_query_topk(
     """Query-vs-corpus approximate cosine top-k via MULTIPROBE
     hyperplane LSH (Lv et al., VLDB'07 — public). Returns
     (query_id, neighbor_id, rank), same contract as
-    :func:`brute_force_topk`.
+    :func:`brute_force_topk`. ``queries=None`` is all-pairs top-k:
+    the corpus probes itself, from the same persisted signatures, so
+    the signature fold still runs once per vector.
 
     Members bucket by their bit-packed signature (one pass, JVM-side);
     each query probes every signature within Hamming distance
@@ -465,12 +473,22 @@ def lsh_query_topk(
     dedup needed. ``n_flip = n_planes`` probes the whole signature
     space and is EXACTLY equal to brute force (pytest-pinned); at
     scale n_flip=2 keeps shuffle ~ bucket-collision volume, not
-    |Q| x |corpus|. Hot buckets sub-split by member-id hash exactly
-    like :func:`lsh_bucket_topk` (same bounded-task guarantee).
-    NULL / zero-norm / non-finite vectors dropped at entry on both
-    sides (unembeddable; the dim contract is the plane dim)."""
+    |Q| x |corpus|.
+
+    Hot-bucket handling: each bucket becomes one ``applyInPandas``
+    cogroup task, so a skewed bucket (boilerplate/dominant-direction
+    corpora) would otherwise be one task holding the whole bucket in
+    memory. Buckets above ``bucket_cap`` MEMBERS are sub-split by a
+    secondary hash of the member id; queries probe every sub-bucket of
+    their bucket, so each (query, member) pair still meets exactly once
+    and the result set is IDENTICAL to the unsplit one — the hot bucket
+    just runs as ceil(n/bucket_cap) bounded tasks instead of one
+    unbounded task (query-side replication x n_sub is the price). The
+    bucket-size table is bounded by 2^n_planes rows — broadcastable by
+    construction. NULL / zero-norm / non-finite vectors dropped at
+    entry on both sides (unembeddable; the dim contract is the plane
+    dim)."""
     vectors = vectors.filter(embeddable(F.col(vec_col), dim))
-    queries = queries.filter(embeddable(F.col(vec_col), dim))
     # explicit `planes` override (r10): an oracle-reproducible plane
     # set (e.g. md5-derived literals) makes the SEEDED recall metric
     # itself hash-gradable cross-engine (VERDICT r9 item 6)
@@ -478,14 +496,13 @@ def lsh_query_topk(
         planes = _planes(n_planes, dim, seed)
     else:
         n_planes = len(planes)
-    # persist (r10, mirroring lsh_bucket_topk): sizes and members both
-    # derive from sig_m, and without the cache the corpus signature —
-    # an interpreted n_planes x dim fold per row — is computed twice
-    # (the sizes broadcast build scans once, the members probe again).
-    # No eager fill needed: the sizes BROADCAST build is its own job
-    # that runs before the main stages and fills the cache (a separate
-    # job, not two racing branches of one job — the r5 defect class
-    # does not apply).
+    # persist (r10): sizes, members and a self-probe all derive from
+    # sig_m, and without the cache the corpus signature — an
+    # interpreted n_planes x dim fold per row — is computed per
+    # consumer. No eager fill needed: the sizes BROADCAST build is its
+    # own job that runs before the main stages and fills the cache (a
+    # separate job, not two racing branches of one job — the r5 defect
+    # class does not apply).
     sig_m = (
         vectors.select(
             F.col(id_col).alias("neighbor_id"),
@@ -493,8 +510,21 @@ def lsh_query_topk(
             signature_col(vec_col, planes).alias("sig"),
         ).persist()
     )
+    if queries is None:
+        q_sig = sig_m.select(
+            F.col("neighbor_id").alias("query_id"),
+            F.col("__v").alias("__q"),
+            F.col("sig").alias("qsig"),
+        )
+    else:
+        q_sig = queries.filter(embeddable(F.col(vec_col), dim)).select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(vec_col).alias("__q"),
+            signature_col(vec_col, planes).alias("qsig"),
+        )
     n_sub = F.ceil(F.count("*") / F.lit(bucket_cap)).cast("int")
     sizes = sig_m.groupBy("sig").agg(n_sub.alias("__nsub"))
+    # combined key: signature in the high bits, sub-bucket in the low 20
     members = sig_m.join(F.broadcast(sizes), "sig").select(
         (F.col("sig").cast("bigint") * F.lit(1 << 20)
          + F.pmod(F.xxhash64("neighbor_id"), F.col("__nsub"))).alias("bucket"),
@@ -503,12 +533,7 @@ def lsh_query_topk(
     )
     masks = [m for m in range(1 << n_planes) if bin(m).count("1") <= n_flip]
     probes = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__q"),
-            signature_col(vec_col, planes).alias("qsig"),
-        )
-        .withColumn("__m", F.explode(F.array(*[F.lit(m) for m in masks])))
+        q_sig.withColumn("__m", F.explode(F.array(*[F.lit(m) for m in masks])))
         .withColumn("sig", F.col("qsig").bitwiseXOR(F.col("__m")))
         # only probe buckets that exist: the size table is bounded by
         # 2^n_planes rows, so this is a broadcast semi-join that prunes
@@ -583,60 +608,3 @@ def candidate_topk(
         vectors, queries, k, n_planes=ANN_N_PLANES, n_flip=ANN_N_FLIP,
         dim=dim, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
-
-
-def lsh_bucket_topk(
-    vectors: DataFrame,
-    k: int,
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_cap: int = 4096,
-) -> DataFrame:
-    """All-pairs approximate top-k: candidates share an LSH bucket,
-    exact cosine rerank inside the bucket. Returns
-    (query_id, neighbor_id, rank).
-
-    Hot-bucket handling: each bucket becomes one ``applyInPandas``
-    cogroup task, so a skewed bucket (boilerplate/dominant-direction
-    corpora) would otherwise be one task holding the whole bucket in
-    memory. Buckets above ``bucket_cap`` MEMBERS are sub-split by a
-    secondary hash of the member id; queries probe every sub-bucket of
-    their bucket, so each (query, member) pair still meets exactly once
-    and the result set is IDENTICAL to the unsplit one — the hot bucket
-    just runs as ceil(n/bucket_cap) bounded tasks instead of one
-    unbounded task (query-side replication x n_sub is the price). The
-    bucket-size table is bounded by 2^n_planes rows — broadcastable by
-    construction. NULL / zero-norm / non-finite vectors dropped at
-    entry (unembeddable; the dim contract is the plane dim)."""
-    vectors = vectors.filter(embeddable(F.col(vec_col), dim))
-    planes = _planes(n_planes, dim, seed)
-    sig = (
-        vectors.select(
-            F.col(id_col), F.col(vec_col),
-            signature_col(vec_col, planes).alias("bucket"),
-        ).persist()
-    )
-    n_sub = F.ceil(F.count("*") / F.lit(bucket_cap)).cast("int")
-    sizes = sig.groupBy("bucket").agg(n_sub.alias("__nsub"))
-    sig2 = sig.join(F.broadcast(sizes), "bucket")
-    # combined key: bucket in the high bits, sub-bucket in the low 20
-    members = sig2.select(
-        (F.col("bucket").cast("bigint") * F.lit(1 << 20)
-         + F.pmod(F.xxhash64(F.col(id_col)), F.col("__nsub"))).alias("bucket"),
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__v"),
-    )
-    queries = sig2.withColumn(
-        "__s", F.explode(F.sequence(F.lit(0), F.col("__nsub") - 1))
-    ).select(
-        (F.col("bucket").cast("bigint") * F.lit(1 << 20) + F.col("__s")).alias(
-            "bucket"
-        ),
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__q"),
-    )
-    # a member lives in exactly one sub-bucket -> no duplicate pairs
-    return _grouped_topk(queries, members, k, _id_dtype(vectors, id_col))

@@ -225,10 +225,10 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ANN: random-hyperplane LSH buckets + exact in-bucket rerank",
 )
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import lsh_bucket_topk
+    from ..operators.similarity import lsh_query_topk
 
     e = load(spark, sf_dir, "embeddings", unique=("vec_id",))
-    return lsh_bucket_topk(e, k=5, n_planes=6, seed=42)
+    return lsh_query_topk(e, None, k=5, n_planes=6, n_flip=0, dim=64)
 
 
 @Q.add(
@@ -4535,7 +4535,7 @@ def weighted_sample_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     "output: (a,b) and (b,a) are judged independently.",
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
+    d = load(spark, sf_dir, "documents", unique=("doc_id",))
     # materialize the split ONCE as an attribute ref before the indexed
     # transform — element_at over an expression would re-split the text
     # per element (the O(len^2) trap cooccur_events documents)

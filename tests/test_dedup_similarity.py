@@ -15,7 +15,9 @@ from llm_batch_processor_spark.operators.dedup import (
     simhash_pairs,
     token_ngrams,
 )
-from llm_batch_processor_spark.operators.similarity import brute_force_topk, lsh_bucket_topk
+from llm_batch_processor_spark.operators.similarity import brute_force_topk, lsh_query_topk
+
+from conftest import SF_SMOKE as SF
 
 DOCS = [
     # 0/1: identical; 2: one-token edit of 0; 3: unrelated; 4: near of 3
@@ -229,7 +231,7 @@ def test_brute_force_topk_finds_planted_neighbor(spark):
 
 def test_lsh_bucket_recall_of_close_pair(spark):
     e = _embeddings(spark)
-    res = lsh_bucket_topk(e, k=3, n_planes=4, seed=42, dim=16).collect()
+    res = lsh_query_topk(e, None, k=3, n_planes=4, n_flip=0, seed=42, dim=16).collect()
     mine = [r for r in res if r["query_id"] == 0]
     # the planted near-identical vector lands in the same bucket
     assert any(r["neighbor_id"] == 1 for r in mine)
@@ -249,15 +251,35 @@ def test_lsh_hot_bucket_split_preserves_results(spark):
     e = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     uncapped = {
         (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in lsh_bucket_topk(e, k=3, n_planes=4, seed=42, dim=16,
-                                 bucket_cap=10**9).collect()
+        for r in lsh_query_topk(e, None, k=3, n_planes=4, n_flip=0, seed=42,
+                                dim=16, bucket_cap=10**9).collect()
     }
     capped = {
         (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in lsh_bucket_topk(e, k=3, n_planes=4, seed=42, dim=16,
-                                 bucket_cap=8).collect()
+        for r in lsh_query_topk(e, None, k=3, n_planes=4, n_flip=0, seed=42,
+                                dim=16, bucket_cap=8).collect()
     }
     assert capped == uncapped and len(capped) == 30 * 3
+
+
+def test_lsh_self_probe_equals_explicit_queries(spark):
+    """``queries=None`` (the corpus probes itself from its persisted
+    signatures) must equal passing the corpus as its own query set,
+    both for the bucket-only probe and for the full probe — and the
+    full probe must equal brute force over all pairs."""
+    e = _embeddings(spark)
+    q = e.select(F.col("vec_id").alias("query_id"), "embedding")
+
+    def rows(df):
+        return {tuple(r) for r in df.collect()}
+
+    for n_flip in (0, 4):
+        self_probe = rows(lsh_query_topk(e, None, k=3, n_planes=4, n_flip=n_flip, dim=16))
+        explicit = rows(lsh_query_topk(e, q, k=3, n_planes=4, n_flip=n_flip, dim=16))
+        assert self_probe == explicit, n_flip
+    # n_flip = n_planes probes every bucket: exact all-pairs top-k
+    assert self_probe == rows(brute_force_topk(e, q, k=3, dim=16))
+    assert len(self_probe) == 20 * 3
 
 
 def test_ivf_recall_of_close_pair_and_exact_at_full_probe(spark):
@@ -688,3 +710,111 @@ def test_simhash_exact_mode_equals_bruteforce_hamming(spark):
     assert want, "vacuous corpus: no pairs within hamming 7"
     assert any(h > 0 for h in want.values()), "only trivial hamming-0 pairs"
     assert got == want
+
+
+def test_brute_query_cap_raises(spark, monkeypatch):
+    """An oversized query frame must raise, not OOM the driver."""
+    from llm_batch_processor_spark.operators import similarity
+
+    from llm_batch_processor_spark.tables import load
+
+    e = load(spark, SF, "embeddings")
+    queries = e.limit(10).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    monkeypatch.setattr(similarity, "BRUTE_QUERY_MAX_ROWS", 5)
+    with pytest.raises(ValueError, match="query side exceeds"):
+        similarity.brute_force_topk(e, queries, k=3, dim=64)
+
+
+def test_brute_cap_admits_bounded_queries(spark):
+    """At the real cap the declared-query shape is unaffected."""
+    from llm_batch_processor_spark.operators.similarity import (
+        brute_force_topk,
+    )
+    from llm_batch_processor_spark.tables import load
+
+    e = load(spark, SF, "embeddings")
+    queries = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    out = brute_force_topk(e, queries, k=3, dim=64)
+    assert out.count() > 0
+
+
+def test_brute_null_ids_dropped_both_sides(spark):
+    """ADVICE r10: the pre-r10 SQL exclusion ``neighbor_id != query_id``
+    dropped NULL-id rows on both sides (NULL compare -> filtered); the
+    numpy mask kept them. Pin the restored contract."""
+    from llm_batch_processor_spark.operators.similarity import (
+        brute_force_topk,
+    )
+
+    vec = [float(i) for i in range(4)]
+    corpus = spark.createDataFrame(
+        [(1, vec), (2, [2.0, 1.0, 0.0, 1.0]), (None, [1.0] * 4)],
+        "vec_id bigint, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(1, vec), (None, vec)],
+        "query_id bigint, embedding array<float>",
+    )
+    rows = brute_force_topk(corpus, queries, k=5, dim=4).collect()
+    assert rows  # query 1 scores the non-NULL corpus
+    assert all(r["neighbor_id"] is not None for r in rows)
+    assert all(r["query_id"] is not None for r in rows)
+
+
+def test_triangles_orientation_exact_on_hub_graph(spark, tmp_path):
+    """The degree-oriented wedge join must count exactly like the
+    brute per-node triangle count on a graph with a high-degree hub —
+    the skew shape the orientation exists for (VERDICT r10 item 3)."""
+    from itertools import combinations
+
+    from llm_batch_processor_spark.queries import all_queries
+
+    # hub doc 0 holds bigrams (a1 a2)..(a5 a6); spoke i holds the two
+    # consecutive hub bigrams (a_i a_{i+1}), (a_{i+1} a_{i+2}) —
+    # hub-spoke jaccard 2/5 = 0.4, consecutive spokes share one gram
+    # (1/3 = 0.33), non-consecutive spokes share none. Every edge sits
+    # strictly above the 0.2 threshold and the hub has the highest
+    # degree, so triangles must be enumerated at their SPOKE corners
+    # under the (deg, id) orientation — the skew shape under test.
+    docs = [(0, " ".join(f"a{i}" for i in range(1, 7)))]
+    for i in range(1, 5):
+        docs.append((i, f"a{i} a{i + 1} a{i + 2}"))
+    sdf = spark.createDataFrame(docs, "doc_id bigint, text string")
+    sdf.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+
+    out = {
+        (r["node"], r["n_triangles"])
+        for r in all_queries()["graph_triangles"]
+        .fn(spark, str(tmp_path))
+        .collect()
+    }
+
+    # brute force: rebuild the exact-jaccard edge set in python
+    def grams(text):
+        toks = text.split(" ")
+        return {f"{a} {b}" for a, b in zip(toks, toks[1:])}
+
+    gs = {d: grams(t) for d, t in docs}
+    ids = sorted(gs)
+    edges = set()
+    for u, v in combinations(ids, 2):
+        inter = len(gs[u] & gs[v])
+        union = len(gs[u] | gs[v])
+        if union and inter / union >= 0.2:
+            edges.add((u, v))
+    tri_count = {d: 0 for d in ids}
+    for a, b, c in combinations(ids, 3):
+        if (
+            (a, b) in edges
+            and (b, c) in edges
+            and (a, c) in edges
+        ):
+            for n in (a, b, c):
+                tri_count[n] += 1
+    expected = {(d, n) for d, n in tri_count.items() if n >= 1}
+    assert out == expected
+    assert expected  # non-degenerate: the fixture really has triangles

@@ -73,6 +73,7 @@ def _dup_docs(spark):
 GATED_DOC_QUERIES = [
     "dedup_ngram_jaccard", "dedup_clusters", "degree_distribution",
     "graph_pagerank", "graph_triangles", "dedup_minhash", "dedup_simhash",
+    "dedup_containment",
 ]
 GATED_VEC_QUERIES = [
     "knn_classify", "embedding_pq_assign", "sim_ann_lsh", "sim_ann_ivf",

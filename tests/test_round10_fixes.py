@@ -9,15 +9,7 @@ z (the z-test is undefined at a degenerate split)."""
 
 import datetime
 
-import pytest
 from pyspark.sql import functions as F  # noqa: F401
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from llm_batch_processor_spark.session import get_spark
-
-    return get_spark(app_name="round10-fixes")
 
 
 def _degenerate_events(spark, tmp_path, n_users=4, purchases_per_user=20):

@@ -9,15 +9,15 @@ invariance sweeps + pristine, each as a `tools/selfcheck.py`
 subprocess (own SparkSession — masters/confs can differ per row), and
 prints the ROBUSTNESS.md-ready matrix.
 
-Expected state (r8 baseline, 274 queries):
+Expected state (276 queries):
   pristine / extreme-ts / extremekeys / nulls / hostile / empty /
   skew / rowperm / nonfinite / ragged / combined / extrememoney /
-  extremeints                                             269/0/5/0
-  dupkeys  260/0/1/13 (the keyed-entity family fails TYPED at entry —
+  extremeints                                             271/0/5/0
+  dupkeys  259/0/1/16 (the keyed-entity family fails TYPED at entry —
                        KeyContractError, no free-floating divergences;
                        agg_approx_distinct is the one remaining
                        rows-only row there)
-  local4 / noBroadcastNoAQE / noCodegen / tokyo-TZ        269/0/5/0
+  local4 / noBroadcastNoAQE / noCodegen / tokyo-TZ        271/0/5/0
 
 Usage:
     python tools/robustness_matrix.py [--rows r1,r2,...] [--sf DIR]
@@ -383,7 +383,7 @@ def main() -> int:
         print(f"wrote {args.out}")
     # The keyed-entity family fails TYPED (KeyContractError at query
     # entry, operators/contracts.py) on duplicate primary keys — on the
-    # dupkeys corpus exactly these 7 queries must land in `contracts`;
+    # dupkeys corpus exactly these 16 queries must land in `contracts`;
     # a FAIL anywhere, or a typed contract outside dupkeys, or a
     # dupkeys contract set differing from the declared class, is a
     # regression (r8: closes the former free-floating 260/7/5 row).
@@ -399,6 +399,11 @@ def main() -> int:
         # ... and the r8 hash-graded exact configurations of the two
         # ANN ops (same neighbor-identity semantics, same gate)
         "sim_ann_lsh_exact", "sim_ann_ivf_exact",
+        # ... their recall metrics, which load the same gated table
+        "sim_ann_lsh_recall", "sim_ann_ivf_recall",
+        # ... and directed containment, keyed on doc_id like the
+        # jaccard family
+        "dedup_containment",
     }
     bad = []
     for name, r in results.items():
