@@ -3,16 +3,24 @@
 Five strategies, each with a distinct scale/recall profile:
 
 - :func:`exact_dedup` — hash-groupBy on content; one shuffle, exact.
-- :func:`minhash_clusters` — MinHash + LSH banding via ``ml.feature``
-  (shingle -> sparse counts -> MinHashLSH approx join); sub-quadratic
-  candidate generation, Jaccard-approximate.
-- :func:`simhash_pairs` — 64-bit SimHash computed entirely with
-  built-in higher-order functions (no Python), banded equi-join + exact
-  Hamming filter (``bit_count(a XOR b)``).
-- :func:`ngram_jaccard_pairs` — token-n-gram inverted index join +
-  exact Jaccard; exact but candidate-bounded by shared-gram blocking.
+- :func:`minhash_pairs` — MinHash signatures + LSH banding (one numpy
+  band-key UDF), banded equi-join, exact Jaccard verification;
+  sub-quadratic candidate generation, recall set by the banding.
+- :func:`simhash_pairs` — 64-bit SimHash (JVM token hashes, one numpy
+  vote/pack UDF), banded equi-join + exact Hamming filter
+  (``bit_count(a XOR b)``).
+- :func:`ngram_jaccard_pairs` — exact Jaccard over token n-gram sets;
+  blocked sparse/dense kernel or AllPairs prefix filtering.
 - :func:`embedding_pairs` — cosine threshold over an embedding column
   (semantic near-dup); pairs via LSH bucketing or brute force.
+
+MinHash and n-gram Jaccard read the same input: one front end,
+:func:`_gram_sets`, hashes every text's token n-grams natively
+(:func:`shingle_hashes`) and collapses docs with identical gram sets to
+one representative; both kernels' outputs are functions of gram sets
+only, so they run on the distinct sets and expand afterwards. Every
+collapse (gram-set identity there, byte identity for SimHash) goes
+through one duplicate-mass probe, :func:`_collapse`.
 
 Pair outputs canonicalize as (id_a < id_b). :func:`connected_components`
 turns pairs into cluster ids: exact driver-side union-find up to a
@@ -83,62 +91,65 @@ def _checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
 COLLAPSE_EXTRA_PAIRS_FACTOR = 1.0
 
 
-def _collapse_exact(df: DataFrame, id_col: str, text_col: str):
-    """Collapse byte-identical texts ahead of a signature kernel —
-    gated on a duplicate-MASS probe so corpora whose duplication is
-    absent or immaterial pay no collapse tax (r6, VERDICT r05 item 2).
+def _collapse(base: DataFrame, key):
+    """Collapse the rows of ``base`` (an ``id`` column plus payload)
+    that share ``key`` ahead of a signature kernel — gated on a
+    duplicate-MASS probe so corpora whose duplication is absent or
+    immaterial pay no collapse tax (r6, VERDICT r05 item 2). ``key``
+    is a narrow digest Column over ``base``: ``md5(text)`` for byte
+    identity (:func:`_collapse_exact`), ``xxhash64(array_sort(gh))``
+    for gram-set identity (:func:`_gram_sets`).
 
     Returns ``(members, reps, n_reps, collapsed)``:
 
     - ``members`` maps every id to its group representative (the min
-      id among rows whose ``text_col`` is identical, grouped by md5
-      digest so the exchange key stays narrow; NULL texts form one
-      group, same as a groupBy would). When the probe finds NO group
-      of >= 2 identical texts, ``members`` is the cheap identity
-      projection ``(id, rep=id)`` — no window, no shuffle, no persist
-      — and graph consumers that join through it see identical
-      semantics (every group has exactly one member).
-    - ``reps`` is one row per distinct text on the collapse path, or
-      every row with ``m = 1`` on the identity path — ``(id, __txt,
-      m)`` with ``m`` the group size.
+      id among rows sharing ``key``; NULL keys form one group, same as
+      a groupBy would). When the probe finds NO material duplication,
+      ``members`` is the cheap identity projection ``(id, rep=id)`` —
+      no window, no shuffle, no persist — and graph consumers that
+      join through it see identical semantics (every group has
+      exactly one member).
+    - ``reps`` is one row per group on the collapse path, or every row
+      with ``m = 1`` on the identity path — ``base``'s columns plus
+      ``m``, the group size.
     - ``n_reps`` is the exact representative count, read off the probe
       aggregate — callers need it for strategy selection and partition
       sizing and previously paid a separate ``reps.count()`` action.
     - ``collapsed`` tells :func:`_expand_pairs` whether rep pairs need
       expansion at all.
 
-    The probe is one two-phase aggregation over ``md5(text)`` — the
-    shuffle carries ~(digest, count) per DISTINCT text, far narrower
-    than the window exchange of the full text payload it replaces on
-    the (common) low-duplication corpus. The gate is MASS, not mere
-    existence: the identity path is exactly the pre-collapse kernel
-    (byte-identical docs produce identical signatures, so they pair
-    through the ordinary candidate join at the kernel's exact
-    self-similarity values — r5's old behavior, bit-identical output),
-    so skipping is always CORRECT and the only question is cost. It
-    collapses when ``sum C(m, 2)`` over duplicate groups — the work
-    the collapse avoids — exceeds ``COLLAPSE_EXTRA_PAIRS_FACTOR x
-    n_rows``, i.e. when the avoided quadratic mass outgrows the O(n)
-    collapse machinery itself (the boilerplate clique collapses; a
-    handful of stray dup pairs does not). On the collapse path the
-    windowed base is persisted AND eagerly count-filled here: members
-    is consumed from two branches of one job downstream (both sides of
-    the expansion join), and a lazy persist races — each branch would
-    replay the window (the r5 multi-branch-persist defect class).
+    The probe is one two-phase aggregation over ``key`` — the shuffle
+    carries ~(digest, count) per DISTINCT key, far narrower than the
+    window exchange of the full payload it replaces on the (common)
+    low-duplication corpus. The gate is MASS, not mere existence: the
+    identity path is exactly the pre-collapse kernel (rows with equal
+    keys produce identical signatures, so they pair through the
+    ordinary candidate join at the kernel's exact self-similarity
+    values — bit-identical output), so skipping is always CORRECT and
+    the only question is cost. It collapses when ``sum C(m, 2)`` over
+    duplicate groups — the work the collapse avoids — exceeds
+    ``COLLAPSE_EXTRA_PAIRS_FACTOR x n_rows``, i.e. when the avoided
+    quadratic mass outgrows the O(n) collapse machinery itself (the
+    boilerplate clique collapses; a handful of stray dup pairs does
+    not). On the collapse path the windowed base is persisted AND
+    eagerly count-filled here: members is consumed from two branches
+    of one job downstream (both sides of the expansion join), and a
+    lazy persist races — each branch would replay the window (the r5
+    multi-branch-persist defect class).
 
     Why collapse sits INSIDE every signature kernel (r5 skew audit):
-    each signature below — minhash bands, simhash, hashed gram sets —
-    is a pure function of the text, so byte-identical docs are fully
-    interchangeable in every candidate join and every verification.
-    Running those stages on distinct texts keeps the quadratic parts
-    quadratic in DISTINCT docs. On the measured boilerplate-clique
-    dataset (half of sf0.1 one identical page — THE real-world 100 TB
-    dedup hazard) the uncollapsed kernels amplified 22-628x vs the
-    uniform corpus; collapsed, the clique costs one group row until
-    the final pair expansion, which is linear in the OUTPUT."""
-    base0 = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__txt"))
+    each signature — minhash bands, simhash, hashed gram sets — is a
+    pure function of the collapse key's payload, so rows with equal
+    keys are fully interchangeable in every candidate join and every
+    verification. Running those stages on distinct payloads keeps the
+    quadratic parts quadratic in DISTINCT docs. On the measured
+    boilerplate-clique dataset (half of sf0.1 one identical page — THE
+    real-world 100 TB dedup hazard) the uncollapsed kernels amplified
+    22-628x vs the uniform corpus; collapsed, the clique costs one
+    group row until the final pair expansion, which is linear in the
+    OUTPUT."""
     stats = (
-        base0.groupBy(F.md5(F.col("__txt")).alias("__h"))
+        base.groupBy(key.alias("__h"))
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(
             F.count(F.lit(1)).alias("n_groups"),
@@ -157,19 +168,27 @@ def _collapse_exact(df: DataFrame, id_col: str, text_col: str):
         stats["extra_pairs"] or 0.0
     ) > COLLAPSE_EXTRA_PAIRS_FACTOR * n_rows
     if not material:
-        reps = base0.withColumn("m", F.lit(1))
-        members = base0.select("id", F.col("id").alias("rep"))
-        return members, reps, n_rows, False
-    w = Window.partitionBy(F.md5(F.col("__txt")))
-    base = (
-        base0.withColumn("rep", F.min("id").over(w))
+        members = base.select("id", F.col("id").alias("rep"))
+        return members, base.withColumn("m", F.lit(1)), n_rows, False
+    w = Window.partitionBy(key)
+    grouped = (
+        base.withColumn("rep", F.min("id").over(w))
         .withColumn("m", F.count(F.lit(1)).over(w))
         .persist()
     )
-    base.count()
-    members = base.select("id", "rep")
-    reps = base.filter(F.col("id") == F.col("rep")).select("id", "__txt", "m")
+    grouped.count()
+    members = grouped.select("id", "rep")
+    reps = grouped.filter(F.col("id") == F.col("rep")).drop("rep")
     return members, reps, n_groups, True
+
+
+def _collapse_exact(df: DataFrame, id_col: str, text_col: str):
+    """Byte-identity :func:`_collapse` of ``(id, __txt)``, keyed on
+    ``md5(text)`` so the exchange key stays narrow (NULL texts form
+    one group). For kernels whose signature reads the raw text
+    (SimHash); gram-set kernels collapse in :func:`_gram_sets`."""
+    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__txt"))
+    return _collapse(base, F.md5(F.col("__txt")))
 
 
 def _expand_pairs(
@@ -181,8 +200,8 @@ def _expand_pairs(
 ) -> DataFrame:
     """Map representative-level pairs back to the exact all-id pair set.
 
-    ``collapsed=False`` (the :func:`_collapse_exact` probe found no
-    byte-identical group) is the no-op fast path: every group has one
+    ``collapsed=False`` (the :func:`_collapse` probe found no material
+    duplicate group) is the no-op fast path: every group has one
     member, so there are no intra pairs and the inter mapping is the
     identity — the kernels already emit canonical ``id_a < id_b``
     pairs, so ``rep_pairs`` IS the answer and the two expansion joins
@@ -191,7 +210,8 @@ def _expand_pairs(
     inter-group: every (x in group(a), y in group(b)) inherits the rep
     pair's value columns (all symmetric: jaccard / hamming / distance),
     re-oriented so id_a < id_b. intra-group: members of a group of
-    >= 2 identical texts are mutual near-dups by definition and are
+    >= 2 identical texts (or gram sets) are mutual near-dups by
+    definition and are
     emitted with the kernel's exact self-similarity constants
     (``intra``: column name -> Column), restricted to ``survivors``
     (an ``(id, ...)`` frame of reps that actually produced a
@@ -257,64 +277,26 @@ def token_ngrams(text_col, n: int = 3):
     )
 
 
-_FNV64 = 1099511628211
-
-
 def shingle_hashes(text_col, n: int = 3):
-    """array<long>: DISTINCT hashed token n-grams of a text column.
+    """array<long>: DISTINCT hashed token n-grams of a text column,
+    entirely JVM-side.
 
     The string-materializing ``token_ngrams`` runs interpreted (Spark
     higher-order functions don't participate in codegen) at whole
-    seconds per million tokens and was the top cost of every shingling
-    pipeline. Here only the per-TOKEN xxhash64 is computed JVM-side
-    (split -> transform, vectorized); consecutive token hashes are then
-    mixed into n-gram hashes in one numpy pass (polynomial rolling mix,
-    wrap-around u64). Distinct token sequences map to distinct hashes
-    w.h.p. (collisions ~ |grams|^2 / 2^64), which is exactly what
-    set-similarity over shingles needs — the gram STRINGS never exist.
-    """
-    tok_hashes = F.transform(F.split(text_col, " "), lambda t: F.xxhash64(t))
+    seconds per million tokens. Here each token is hashed once
+    (``xxhash64``) and every n-gram hash is ``xxhash64`` over its n
+    token hashes, so the gram STRINGS never exist and no Python worker
+    runs (guide §4.1: built-ins over pandas_udf). Distinct token
+    sequences map to distinct hashes w.h.p. (collisions ~ |grams|^2 /
+    2^64), which is what set similarity over shingles needs.
 
-    def mix_fn(arrays: pd.Series) -> pd.Series:
-        p = np.uint64(_FNV64)
-        out = []
-        for h in arrays:
-            if h is None:
-                out.append(None)
-                continue
-            a = np.asarray(h, dtype=np.int64).view(np.uint64)
-            m = len(a) - n + 1
-            if m <= 0:
-                out.append(np.empty(0, dtype=np.int64))
-                continue
-            acc = a[:m].copy()
-            for j in range(1, n):
-                acc = acc * p + a[j : m + j]
-            out.append(np.unique(acc).view(np.int64))
-        return pd.Series(out)
-
-    return F.pandas_udf(mix_fn, "array<long>")(tok_hashes)
-
-
-def shingle_hashes_sql(text_col, n: int = 3):
-    """array<long>: DISTINCT hashed token n-grams, entirely JVM-side.
-
-    Same contract as :func:`shingle_hashes` — distinct token sequences
-    map to distinct 64-bit hashes w.h.p. — but the n-gram mix is
-    ``xxhash64`` over the n token hashes instead of the numpy FNV
-    polynomial, so the whole gram-set construction is native SQL: no
-    ArrowEvalPython stage, no Python workers, no Arrow round-trip of
-    the token-hash arrays (guide §4.1: built-ins over pandas_udf).
-    The FNV form needs wrap-around u64 arithmetic, which ANSI mode
-    (this session's default, matching the DuckDB oracle) rejects.
-
-    ONLY for consumers whose OUTPUT is hash-value-independent: the
-    exact Jaccard kernel compares gram SETS, so any injective-w.h.p.
-    hash yields identical pairs (collision odds ~ |grams|^2 / 2^64,
-    the bound both mixes already accept). The minhash/simhash kernels
-    keep :func:`shingle_hashes`: their banded candidate generation —
-    and therefore their emitted pair set — depends on the hash VALUES,
-    which are pinned by tests and by rows-only driver grades."""
+    Both consumers go through :func:`_gram_sets`. Exact Jaccard compares
+    gram SETS, so its pairs are invariant to the hash choice. MinHash
+    verifies every candidate with the same exact set Jaccard, so the
+    hash values only decide which candidates its banding surfaces
+    (recall), never an emitted distance. A polynomial rolling mix would
+    need wrap-around long arithmetic, which ANSI mode (this session's
+    default, matching the DuckDB oracle) rejects."""
     toks = F.split(text_col, " ")
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
     if n == 1:
@@ -324,6 +306,54 @@ def shingle_hashes_sql(text_col, n: int = 3):
     return F.array_distinct(
         F.transform(zipped, lambda s: F.xxhash64(*[s[str(j)] for j in range(n)]))
     )
+
+
+def _gram_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int, cache: bool = True
+):
+    """The gram-set front end shared by :func:`minhash_pairs_collapsed`
+    and :func:`ngram_jaccard_pairs_collapsed`.
+
+    Returns ``(members, sets, n_sets, collapsed)``: the id -> rep
+    mapping, the ``(id, m, gh)`` frame of representatives with a
+    NON-EMPTY gram set ``gh`` (:func:`shingle_hashes`) and group size
+    ``m``, the representative count (empty sets included — it sizes
+    partitions and blocks), and whether a real collapse happened.
+
+    The collapse is on gram-set identity (:func:`_collapse` keyed on
+    xxhash64 over the SORTED distinct gram hashes — order-independent;
+    collisions in the same |docs|^2/2^64 class the gram hashes already
+    accept; NULL gh folds to one group). Both kernels' outputs are
+    functions of gram sets only: docs with identical sets pair at
+    exactly Jaccard 1.0 / distance 0.0 (k/(k+k-k) = 1, the constant the
+    intra expansion emits) whether or not they are byte-identical, and
+    a MinHash signature is a min over the set. So the set-identity
+    collapse is output-identical to a byte-identity one. Groups whose
+    set is empty (sub-shingle-length or NULL texts) never pair, and
+    their members are absent from ``sets``, so they never expand
+    either.
+
+    ``cache=True`` persists the hashed sets ahead of the probe, whose
+    job then fills the cache: the raw text is scanned ONCE and every
+    later consumer reads cached gram sets (n-gram Jaccard's vocabulary
+    probe and kernel). MinHash passes ``False``: it eagerly caches its
+    own signature table right after the probe, so the sets are read
+    only twice and a cache fill of its own would cost one more Spark
+    job per call."""
+    base = df.select(
+        F.col(id_col).alias("id"),
+        shingle_hashes(F.col(text_col), n).alias("gh"),
+    )
+    if cache:
+        base = base.persist()
+    members, reps, n_sets, collapsed = _collapse(
+        base, F.xxhash64(F.array_sort("gh"))
+    )
+    if cache and collapsed:
+        # the windowed frame _collapse persisted now serves every consumer
+        base.unpersist()
+    sets = reps.select("id", "m", "gh").filter(F.size("gh") > 0)
+    return members, sets, n_sets, collapsed
 
 
 # ---------------------------------------------------------------------------
@@ -380,8 +410,8 @@ def minhash_pairs(
     MinHash + LSH banding, then EXACT verification.
 
     Pipeline (shingle -> minhash -> band -> bucket-join -> verify):
-    1. shingle sets hashed JVM-side (xxhash64 per n-gram — the scan and
-       tokenization never leave codegen);
+    1. shingle sets hashed JVM-side by the shared front end
+       :func:`_gram_sets` (xxhash64 per n-gram — no Python worker);
     2. one Arrow batch computes ``bands x rows`` minhash permutations
        (numpy, universal hashing mod the Mersenne prime 2^61-1, fixed
        seed) and folds each band's rows into a single bucket key;
@@ -393,13 +423,13 @@ def minhash_pairs(
        only affects recall (P[collide] = 1-(1-s^r)^b ~ 0.96 at s=0.5
        with b=24, r=3).
 
-    Scale: postings = n_reps x b rows. Byte-identical docs are
-    collapsed to one representative BEFORE signatures (r5 skew audit:
-    a half-identical corpus made the banded join quadratic in the
-    clique — 22x wall amplification at sf0.1), then the rep pair set
-    expands back to the exact uncollapsed output (intra-group pairs
-    are distance-0 by definition), so candidate volume is quadratic
-    only in DISTINCT near-dup texts."""
+    Scale: postings = n_reps x b rows. Docs with identical gram sets
+    are collapsed to one representative BEFORE signatures (r5 skew
+    audit: a half-identical corpus made the banded join quadratic in
+    the clique — 22x wall amplification at sf0.1), then the rep pair
+    set expands back to the exact uncollapsed output (intra-group
+    pairs are distance-0 by definition), so candidate volume is
+    quadratic only in DISTINCT near-dup gram sets."""
     rep_pairs, members, survivors, collapsed = minhash_pairs_collapsed(
         df,
         id_col,
@@ -429,11 +459,11 @@ def minhash_pairs_collapsed(
     """Collapsed form of :func:`minhash_pairs` for graph consumers.
 
     Returns ``(rep_pairs, members, survivors, collapsed)``: near-dup
-    pairs among exact-dedup REPRESENTATIVES only, the id -> rep
-    mapping (identity projection — no shuffle — when the duplicate
-    probe found no byte-identical group), the ``(id, m)`` frame of
-    reps that produced a non-empty shingle set, and whether a real
-    collapse happened. Consumers that aggregate over the near-dup
+    pairs among gram-set REPRESENTATIVES only, the id -> rep mapping
+    (identity projection — no shuffle — when the duplicate probe found
+    no material group), the ``(id, m)`` frame of reps that produced a
+    non-empty shingle set, and whether a real collapse happened (see
+    :func:`_gram_sets`). Consumers that aggregate over the near-dup
     graph (connected components, triangle counts) can work on the
     collapsed graph and expand in closed form instead of
     materializing intra-clique pairs."""
@@ -464,20 +494,14 @@ def minhash_pairs_collapsed(
 
     # signature table materialized ONCE (rep id, shingle hashes, band
     # keys): three consumers below (band postings + both verify sides)
-    # would otherwise each re-run the shingle scan. Small corpora use a
-    # lazy persist (first consumer fills the cache — no extra job); big
-    # ones cut lineage with an eager localCheckpoint so the downstream
-    # joins replan from materialized blocks.
-    members, reps, n_docs, collapsed = _collapse_exact(df, id_col, text_col)
-    sigs = (
-        _spread(reps, n_docs).select(
-            "id",
-            "m",
-            shingle_hashes(F.col("__txt"), shingle_n).alias("gh"),
-        )
-        .filter(F.size("gh") > 0)
-        .withColumn("bands", band_udf("gh"))
+    # would otherwise each re-run the band kernel. Small corpora fill a
+    # persist eagerly; big ones cut lineage with an eager
+    # localCheckpoint so the downstream joins replan from materialized
+    # blocks.
+    members, sets, n_docs, collapsed = _gram_sets(
+        df, id_col, text_col, shingle_n, cache=False
     )
+    sigs = _spread(sets, n_docs).withColumn("bands", band_udf("gh"))
     if n_docs <= 1_000_000:
         # eager fill: the banded self-join (a,b) and both verify sides
         # scan sigs inside ONE job — a lazy persist races and replays
@@ -901,10 +925,10 @@ def ngram_jaccard_pairs(
     (``t*|a| <= |b| <= |a|/t``) prunes further before verification
     against the full gram arrays (array_intersect).
 
-    Either strategy runs on exact-dedup representatives only
-    (byte-identical texts have identical gram sets — Jaccard 1.0 by
-    definition) and the pair set expands back afterwards; see
-    :func:`_collapse_exact` for the measured skew rationale."""
+    Either strategy runs on gram-set representatives only (docs with
+    identical gram sets pair at Jaccard 1.0 by definition) and the
+    pair set expands back afterwards; see :func:`_gram_sets` and
+    :func:`_collapse` for the measured skew rationale."""
     rep_pairs, members, survivors, collapsed = ngram_jaccard_pairs_collapsed(
         df, id_col, text_col, n, min_jaccard, dense_vocab_limit, block_size
     )
@@ -931,16 +955,16 @@ def ngram_jaccard_pairs_collapsed(
     """Collapsed form of :func:`ngram_jaccard_pairs` for graph consumers.
 
     Returns ``(rep_pairs, members, survivors, collapsed)``: exact
-    Jaccard pairs among exact-dedup REPRESENTATIVES — each pair row is
+    Jaccard pairs among gram-set REPRESENTATIVES — each pair row is
     ``(id_a, id_b, jaccard, m_a, m_b)`` with both endpoints' collapse
     multiplicities carried along (r10: graph consumers read them off
     the pair instead of re-joining the survivors frame per edge,
-    guide §2.4) — the id -> rep
-    mapping (identity projection — no shuffle — when the duplicate
-    probe found no byte-identical group), the ``(id, m)`` frame of
-    reps with a non-empty gram set (identical sub-shingle-length texts
-    never pair — their groups must not expand either), and whether a
-    real collapse happened. Graph consumers (connected components,
+    guide §2.4) — the id -> rep mapping (identity projection — no
+    shuffle — when the duplicate probe found no material group), the
+    ``(id, m)`` frame of reps with a non-empty gram set (identical
+    sub-shingle-length texts never pair — their groups must not expand
+    either), and whether a real collapse happened (see
+    :func:`_gram_sets`). Graph consumers (connected components,
     triangle counting) aggregate on the collapsed graph and expand in
     closed form instead of materializing intra-clique pairs."""
     t = float(min_jaccard)
@@ -949,84 +973,11 @@ def ngram_jaccard_pairs_collapsed(
         # t = 0 would ask for the full n^2 cross product, which is
         # never the operator anyone wants at scale
         raise ValueError("min_jaccard must be > 0")
-    # hashed gram sets, materialized once: the vocabulary probe and both
-    # downstream strategies consume them (lazy persist below 1 M rows —
-    # the vocabulary probe's distinct map stage, the next single-branch
-    # job, fills the cache before any multi-branch consumer scans it)
-    # set-identity collapse (r10; guide §1.2: remove passes). The old
-    # _collapse_exact grouped by md5(text) — a dedicated full pass over
-    # the raw text BEFORE the shingle pass, i.e. two corpus scans per
-    # kernel call. But THIS kernel's output depends only on gram SETS:
-    # docs with identical sets pair at jaccard exactly 1.0 whether or
-    # not they are byte-identical (k/(k+k-k) = 1.0 — the same constant
-    # the intra expansion emits), so collapsing on a set-identity
-    # digest computed FROM the shingles themselves is output-identical
-    # — reps stay the group-min id, survivors still exclude empty sets
-    # (set-identical empty docs group together but can never pair,
-    # exactly as the byte groups behaved) — and the raw text is
-    # scanned ONCE. The digest is xxhash64 over the SORTED distinct
-    # gram hashes (order-independent by construction; collisions the
-    # same |docs|^2/2^64 class the gram hashes already accept; NULL gh
-    # folds to one group as md5's NULL group did). The gram sets are
-    # computed by the native transform + xxhash64 mix (no pandas FNV:
-    # the ArrowEvalPython stage is gone, ANSI forbids wrap-around long
-    # math, and gram-set equality is hash-choice-invariant);
-    # minhash/simhash keep _collapse_exact + the pandas mix because
-    # their banded candidate sets depend on byte/hash values.
-    base0 = (
-        df.select(
-            F.col(id_col).alias("id"),
-            shingle_hashes_sql(F.col(text_col), n).alias("gh"),
-        ).persist()
-    )
-    set_key = F.xxhash64(F.array_sort("gh"))
-    stats = (
-        base0.groupBy(set_key.alias("__h"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(
-            F.count(F.lit(1)).alias("n_groups"),
-            F.sum("c").alias("n_rows"),
-            F.max("c").alias("max_c"),
-            # double: C(m,2) of a trillion-row clique overflows int64
-            F.sum(F.col("c").cast("double") * (F.col("c") - 1) / 2).alias(
-                "extra_pairs"
-            ),
-        )
-        .first()
-    )
-    n_groups = stats["n_groups"] or 0
-    n_rows = stats["n_rows"] or 0
-    material = (stats["max_c"] or 0) >= 2 and (
-        stats["extra_pairs"] or 0.0
-    ) > COLLAPSE_EXTRA_PAIRS_FACTOR * n_rows
-    if not material:
-        members = base0.select("id", F.col("id").alias("rep"))
-        sets_src = base0.withColumn("m", F.lit(1))
-        n_input, collapsed = n_rows, False
-    else:
-        w = Window.partitionBy(set_key)
-        base = (
-            base0.withColumn("rep", F.min("id").over(w))
-            .withColumn("m", F.count(F.lit(1)).over(w))
-            .persist()
-        )
-        # eager fill: members is consumed from two branches of one job
-        # downstream (both sides of the expansion join) — a lazy
-        # persist races and each branch would replay the window (the
-        # r5 multi-branch-persist defect class)
-        base.count()
-        base0.unpersist()
-        members = base.select("id", "rep")
-        sets_src = base.filter(F.col("id") == F.col("rep")).select(
-            "id", "gh", "m"
-        )
-        n_input, collapsed = n_groups, True
-    # no separate sets_df persist: on either path this is a projection
-    # of the frame the probe just cached, so the probe job IS the fill
-    # and every later consumer (gram probe, kernel, survivors) reads
-    # cached gram sets — the raw text is never rescanned
-    sets_df = sets_src.select("id", "m", "gh").filter(F.size("gh") > 0)
-    n_docs = max(1, int(n_input))
+    # gram sets from the shared front end: set-identity collapse, one
+    # raw-text scan, cached sets that the vocabulary probe and both
+    # strategies below read
+    members, sets_df, n_sets, collapsed = _gram_sets(df, id_col, text_col, n)
+    n_docs = max(1, int(n_sets))
     id_dtype = _id_dtype(df, id_col)
 
     # strategy gate (r9, rewritten after the sf10 ladder probe; r10:
@@ -1151,43 +1102,48 @@ def collapsed_degree_nodes(
 ):
     """Per-node degrees of the EXPANDED near-dup graph, computed on the
     collapsed rep graph — shared by the graph consumers
-    (``graph_pagerank``, ``degree_distribution``).
+    (``graph_pagerank``, ``degree_distribution``). ``rep_pairs`` is
+    :func:`ngram_jaccard_pairs_collapsed` output: each edge carries
+    both endpoints' group sizes ``(m_a, m_b)``, so the neighbor
+    multiplicity is read straight off the edge (r10, guide §2.4: no
+    per-edge join against ``survivors``).
 
     Returns ``(adj, nodes)``:
 
     - ``adj``: the symmetric rep adjacency ``(g, h, m_h)`` with the
-      neighbor group's multiplicity attached. ``persist_adj=True`` is
-      for callers that re-scan adj per iteration (``graph_pagerank``'s
-      fixed point); single-consumer callers (``degree_distribution``
-      reads adj exactly once, inside nodes' lineage) keep the default
-      and avoid a cache entry nobody ever reads again (ADVICE r05).
-      The union's two branches read the CHECKPOINTED rp either way, so
-      the pair-generation kernel is never replayed;
+      neighbor group's multiplicity attached, both orientations of
+      every edge from ONE explode over the pair scan. ``persist_adj=
+      True`` is for callers that re-scan adj per iteration
+      (``graph_pagerank``'s fixed point); single-consumer callers
+      (``degree_distribution`` reads adj exactly once, inside nodes'
+      lineage) keep the default and avoid a cache entry nobody ever
+      reads again (ADVICE r05);
     - ``nodes``: ``(g, m, deg)`` for every rep whose members have
       degree >= 1. Every member of group ``g`` (size ``m``) has the
       IDENTICAL expanded degree ``deg = (m - 1) + sum(m_h over rep
-      edges)``: the ``m - 1`` intra-clique neighbors (byte-identical
-      survivor texts pair at jaccard 1.0 by definition) plus one edge
-      to EVERY member of each neighboring group. Rep-pair endpoints are
-      always survivors (pairs come from non-empty gram sets), so the
-      left join from survivors covers all of them.
+      edges)``: the ``m - 1`` intra-clique neighbors (members with
+      identical gram sets pair at jaccard 1.0 by definition) plus one
+      edge to EVERY member of each neighboring group. Rep-pair
+      endpoints are always survivors (pairs come from non-empty gram
+      sets), so the left join from survivors covers all of them.
 
     This is the closed form of exploding ``_expand_pairs`` output and
     counting endpoints — identical values, but the intra-clique m^2/2
-    pair set is never materialized (the 100 TB boilerplate hazard).
-
-    When ``rep_pairs`` carries the kernel's ``(m_a, m_b)`` multiplicity
-    columns (ngram_jaccard_pairs_collapsed does since r10), the
-    neighbor multiplicity is read straight off each edge and the
-    per-edge join against the survivors frame disappears (guide §2.4:
-    two ops keyed the same way share the exchange — here the join
-    vanishes outright). Identical values either way: rep-pair endpoints
-    are always survivors and ``m_a``/``m_b`` ARE those survivors' m."""
-    carried = {"m_a", "m_b"}.issubset(set(rep_pairs.columns))
-    if not carried:
-        surv_m = survivors.select(
-            F.col("id").alias("h"), F.col("m").alias("m_h")
+    pair set is never materialized (the 100 TB boilerplate hazard)."""
+    edge = F.explode(
+        F.array(
+            F.struct(
+                F.col("id_a").alias("g"),
+                F.col("id_b").alias("h"),
+                F.col("m_b").alias("m_h"),
+            ),
+            F.struct(
+                F.col("id_b").alias("g"),
+                F.col("id_a").alias("h"),
+                F.col("m_a").alias("m_h"),
+            ),
         )
+    ).alias("e")
     if persist_adj:
         # multi-consumer callers (graph_pagerank re-scans adj once per
         # fixed-point round, several branches of ONE job): EAGER
@@ -1197,68 +1153,13 @@ def collapsed_degree_nodes(
         # own 25 s single-pass at sf1). The pair set is output-bounded,
         # so materializing it once — and truncating the kernel lineage
         # with it — is the cheap side.
-        if carried:
-            rp = _checkpoint(rep_pairs.select("id_a", "id_b", "m_a", "m_b"))
-            adj = (
-                rp.select(
-                    F.col("id_a").alias("g"),
-                    F.col("id_b").alias("h"),
-                    F.col("m_b").alias("m_h"),
-                )
-                .unionByName(
-                    rp.select(
-                        F.col("id_b").alias("g"),
-                        F.col("id_a").alias("h"),
-                        F.col("m_a").alias("m_h"),
-                    )
-                )
-                .persist()
-            )
-        else:
-            rp = _checkpoint(rep_pairs.select("id_a", "id_b"))
-            adj = (
-                rp.select(F.col("id_a").alias("g"), F.col("id_b").alias("h"))
-                .unionByName(
-                    rp.select(F.col("id_b").alias("g"), F.col("id_a").alias("h"))
-                )
-                .join(surv_m, "h")
-                .persist()
-            )
+        rp = _checkpoint(rep_pairs.select("id_a", "id_b", "m_a", "m_b"))
+        adj = rp.select(edge).select("e.g", "e.h", "e.m_h").persist()
     else:
-        # single-consumer path (degree_distribution reads adj exactly
-        # once, inside nodes' lineage): symmetrize with explode — both
-        # edge orientations come out of ONE scan of the pair kernel, so
-        # there is no two-branch race to guard and the eager checkpoint
-        # job (+ its block write/read) disappears; the kernel runs once,
-        # inside the consumer's own job (r10, guide §1.2/§2.1)
-        adj = rep_pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("id_a").alias("g"),
-                        F.col("id_b").alias("h"),
-                        *(
-                            [F.col("m_b").alias("m_h")]
-                            if carried
-                            else []
-                        ),
-                    ),
-                    F.struct(
-                        F.col("id_b").alias("g"),
-                        F.col("id_a").alias("h"),
-                        *(
-                            [F.col("m_a").alias("m_h")]
-                            if carried
-                            else []
-                        ),
-                    ),
-                )
-            ).alias("e")
-        )
-        if carried:
-            adj = adj.select("e.g", "e.h", "e.m_h")
-        else:
-            adj = adj.select("e.g", "e.h").join(surv_m, "h")
+        # single consumer: the kernel runs once, inside the consumer's
+        # own job — no two-branch race to guard and no checkpoint job
+        # (r10, guide §1.2/§2.1)
+        adj = rep_pairs.select(edge).select("e.g", "e.h", "e.m_h")
     ext = adj.groupBy("g").agg(F.sum("m_h").alias("ext_deg"))
     nodes = (
         survivors.select(F.col("id").alias("g"), "m")
@@ -1493,27 +1394,23 @@ def embedding_pairs(
 
 def connected_components(
     pairs: DataFrame,
-    all_ids: DataFrame | None = None,
-    id_col: str = "id",
     max_iter: int = 10,
     driver_edge_limit: int = 5_000_000,
 ) -> DataFrame:
-    """Connected components of the near-dup graph -> (id, cluster_id).
+    """Connected components of the near-dup graph -> (id, cluster_id)
+    for every edge endpoint, cluster_id = min id per component.
 
-    ``all_ids=None`` labels only the edge endpoints (every non-endpoint
-    is a singleton by definition, so callers that left-join the labels
-    back lose nothing) — on the bounded driver path the entire result
-    is then synthesized from the collected edge list with ZERO further
-    Spark jobs, where an explicit ``all_ids`` costs a distinct + join.
+    Only endpoints are labeled: every other id is a singleton by
+    definition, so callers that left-join the labels back lose nothing.
 
     Near-dup EDGE lists are orders of magnitude smaller than the corpus
     (LSH + verification leaves only true near-dup pairs), so up to
     ``driver_edge_limit`` edges the components are solved exactly with a
-    driver-side union-find (one collect of the edge list — never the
-    data) and broadcast-joined back onto ``all_ids``: one pass, no
-    iteration. Beyond the limit it falls back to distributed min-label
-    propagation (below). Both paths produce identical labels (min id
-    per component; singletons map to themselves)."""
+    driver-side union-find over one collect of the edge list — never
+    the data — and the labels are built from the collected endpoints
+    with ZERO further Spark jobs. Beyond the limit it falls back to
+    distributed min-label propagation (below). Both paths produce
+    identical labels."""
     # materialize once with an explicit count: the edge list usually
     # has an expensive lineage (an LSH join), and a limit-collect on
     # the unfilled persist does NOT fill it — executeTake's scale-up
@@ -1545,41 +1442,18 @@ def connected_components(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         pairs.unpersist()
-        spark = pairs.sparkSession
-        id_schema = pairs.select(F.col("id_a").alias(id_col)).schema.add(
+        id_schema = pairs.select(F.col("id_a").alias("id")).schema.add(
             "cluster_id", pairs.schema["id_a"].dataType
         )
-        if all_ids is None:
-            # every endpoint is already driver-side: emit (node, root)
-            # for the full endpoint set directly — no distinct, no join
-            nodes = {r["id_a"] for r in head} | {r["id_b"] for r in head}
-            rows = [(x, find(x)) for x in nodes]
-            return spark.createDataFrame(rows or [], schema=id_schema)
-        mapping = [(x, find(x)) for x in list(parent)]
-        if mapping:
-            map_df = spark.createDataFrame(
-                mapping, schema=pairs.select(F.col("id_a").alias("u")).schema.add(
-                    "cluster_min", pairs.schema["id_a"].dataType
-                )
-            )
-        else:
-            map_df = None
-        labels = all_ids.select(F.col(id_col).alias("u"))
-        if map_df is not None:
-            labels = labels.join(F.broadcast(map_df), "u", "left").select(
-                "u", F.coalesce("cluster_min", F.col("u")).alias("cluster_id")
-            )
-        else:
-            labels = labels.select("u", F.col("u").alias("cluster_id"))
-        return labels.select(F.col("u").alias(id_col), "cluster_id")
+        nodes = {r["id_a"] for r in head} | {r["id_b"] for r in head}
+        rows = [(x, find(x)) for x in nodes]
+        return pairs.sparkSession.createDataFrame(rows, schema=id_schema)
 
-    labels = _label_propagation_cc(
-        pairs, all_ids, id_col, max_iter, n_pairs=n_edges
-    )
+    labels = _label_propagation_cc(pairs, max_iter, n_pairs=n_edges)
     # every heavy consumer of `pairs` inside the contraction is EAGER
     # (round-0 checkpoints); the returned plan references only
-    # checkpoint-cut frames (+ all_ids when given), so the persist can
-    # be dropped here instead of leaking for the session's lifetime
+    # checkpoint-cut frames, so the persist can be dropped here instead
+    # of leaking for the session's lifetime
     pairs.unpersist()
     return labels
 
@@ -1605,17 +1479,14 @@ _CC_EDGE_ROWS_PER_TASK = 2_000_000
 
 def _label_propagation_cc(
     pairs: DataFrame,
-    all_ids: DataFrame | None,
-    id_col: str = "id",
     max_iter: int = 10,
     n_pairs: int | None = None,
 ) -> DataFrame:
     """Min-label CONTRACTION connected components (r10 rewrite).
 
-    Returns (id, cluster_id) for every id in ``all_ids`` (singletons
-    map to themselves; ``all_ids=None`` labels the edge endpoints
-    only), cluster_id = min id per component — identical labels to the
-    bounded driver union-find path (pytest-pinned).
+    Returns (id, cluster_id) for every edge endpoint, cluster_id = min
+    id per component — identical labels to the bounded driver
+    union-find path (pytest-pinned).
 
     Each round: (1) label every node with the min of itself and its
     neighbors — ONE aggregation whose map-side combine means the
@@ -1642,10 +1513,7 @@ def _label_propagation_cc(
     count scales with the measured |pairs| (the caller's persist-fill
     count, reused) instead of staying at the session default.
 
-    Semantics note: nodes that appear only as relay endpoints (present
-    in edges, absent from ``all_ids``) still transmit connectivity and
-    can contribute the component min — exactly like the driver
-    union-find path. Every lineage cut routes through
+    Every lineage cut routes through
     :func:`_checkpoint`: reliable on a cluster with a configured
     checkpoint dir, localCheckpoint otherwise."""
     spark = pairs.sparkSession
@@ -1718,16 +1586,4 @@ def _label_propagation_cc(
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, saved_conf)
-    endpoint_labels = full.select(
-        F.col("u").alias(id_col), F.col("lab").alias("cluster_id")
-    )
-    if all_ids is None:
-        return endpoint_labels
-    return (
-        all_ids.select(F.col(id_col))
-        .join(endpoint_labels, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-        )
-    )
+    return full.select(F.col("u").alias("id"), F.col("lab").alias("cluster_id"))

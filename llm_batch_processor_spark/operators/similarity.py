@@ -321,13 +321,16 @@ def ivf_topk(
     (query_id, neighbor_id, rank). NULL / zero-norm / non-finite /
     wrong-``dim`` vectors dropped at entry (unembeddable; a NaN row
     would also poison the numpy Lloyd centroids, and a ragged row
-    crashes the batch stack). Pass the schema-declared ``dim`` to skip
+    crashes the batch stack), as are NULL ids (the query and member
+    sides are the same frame). Pass the schema-declared ``dim`` to skip
     the modal-dim inference scan; ``dim=None`` infers it."""
     if dim is None:
         from ..functions.vectors import modal_dim
 
         dim = modal_dim(vectors, vec_col)
-    vectors = vectors.filter(embeddable(F.col(vec_col), dim))
+    vectors = vectors.filter(
+        embeddable(F.col(vec_col), dim) & F.col(id_col).isNotNull()
+    )
     feats = vectors.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("arr"),
@@ -485,10 +488,12 @@ def lsh_query_topk(
     just runs as ceil(n/bucket_cap) bounded tasks instead of one
     unbounded task (query-side replication x n_sub is the price). The
     bucket-size table is bounded by 2^n_planes rows — broadcastable by
-    construction. NULL / zero-norm / non-finite vectors dropped at
-    entry on both sides (unembeddable; the dim contract is the plane
-    dim)."""
-    vectors = vectors.filter(embeddable(F.col(vec_col), dim))
+    construction. NULL / zero-norm / non-finite vectors and NULL ids
+    dropped at entry on both sides (unembeddable; the dim contract is
+    the plane dim)."""
+    vectors = vectors.filter(
+        embeddable(F.col(vec_col), dim) & F.col(id_col).isNotNull()
+    )
     # explicit `planes` override (r10): an oracle-reproducible plane
     # set (e.g. md5-derived literals) makes the SEEDED recall metric
     # itself hash-gradable cross-engine (VERDICT r9 item 6)
@@ -517,7 +522,9 @@ def lsh_query_topk(
             F.col("sig").alias("qsig"),
         )
     else:
-        q_sig = queries.filter(embeddable(F.col(vec_col), dim)).select(
+        q_sig = queries.filter(
+            embeddable(F.col(vec_col), dim) & F.col(query_id_col).isNotNull()
+        ).select(
             F.col(query_id_col).alias("query_id"),
             F.col(vec_col).alias("__q"),
             signature_col(vec_col, planes).alias("qsig"),

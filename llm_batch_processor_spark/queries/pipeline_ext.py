@@ -87,7 +87,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components, minhash_pairs_collapsed
 
     d = load(spark, sf_dir, "documents", unique=("doc_id",))
-    # collapsed form (r5 skew audit): CC runs on the exact-dedup
+    # collapsed form (r5 skew audit): CC runs on the gram-set
     # REPRESENTATIVE graph and labels expand through the id->rep map —
     # a boilerplate clique contributes one node instead of a quadratic
     # intra-pair set, and the labels are provably identical (each rep
@@ -97,9 +97,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_pairs, members, surv, _collapsed = minhash_pairs_collapsed(
         d, shingle_n=3, jaccard_max_distance=0.5
     )
-    cc = connected_components(
-        rep_pairs.select("id_a", "id_b"), None, id_col="id", max_iter=5
-    )
+    cc = connected_components(rep_pairs.select("id_a", "id_b"), max_iter=5)
     rep_label = surv.join(cc, "id", "left").select(
         F.col("id").alias("rep"),
         F.coalesce("cluster_id", F.col("id")).alias("rep_cluster"),
@@ -1630,14 +1628,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # id, so min-over-component is unchanged; sizes count members
     # after expansion.
     rep_pairs, members, surv, _collapsed = ngram_jaccard_pairs_collapsed(d, n=2, min_jaccard=0.2)
-    # all_ids=None: only edge endpoints can land in a size>=2 cluster,
-    # and on the bounded path the labels come straight off the collected
-    # edge list — no distinct/join jobs. connected_components persists
-    # and eagerly counts the edge frame itself, so a second persist
-    # here only added a duplicate cache entry that nothing ever reused
-    # (r10: removed; the kernel still executes exactly once, into CC's
-    # own cache fill).
-    cc = connected_components(rep_pairs.select("id_a", "id_b"), None)
+    # CC labels edge endpoints only — the only ids that can land in a
+    # size>=2 cluster besides the isolated dup groups added below.
+    # connected_components persists and eagerly counts the edge frame
+    # itself, so the kernel executes exactly once, into CC's own cache
+    # fill (r10).
+    cc = connected_components(rep_pairs.select("id_a", "id_b"))
     # a survivor group of >= 2 identical docs is a cluster even when its
     # rep has no rep-graph edge (all its edges were intra-group)
     isolated = (
@@ -2696,7 +2692,7 @@ def dedup_semantic_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = embedding_pairs(e, min_cosine=0.4, dim=64)
     # endpoint-only labels suffice: non-endpoints read as 'unique'
     # through the left join below
-    labels = connected_components(pairs, None)
+    labels = connected_components(pairs)
     lab = labels.select(
         F.col("id").alias("doc_id"), F.col("cluster_id").cast("bigint").alias("cid")
     )

@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds the imported package, for the Python workers
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime-settable confs every query path relies on. Kept minimal:
 # - UTC session TZ: the testdata timestamps are naive (parquet
 #   isAdjustedToUTC=false); DuckDB treats them naively, so any
@@ -72,7 +75,11 @@ def get_spark(
     Shuffle partitions default to 2x local cores (on a real cluster,
     leave AQE to coalesce); AQE (runtime coalesce + skew-join split) and
     Arrow transfer for the pandas_udf paths come from
-    :func:`ensure_session_conf`, like on any other session.
+    :func:`ensure_session_conf`, like on any other session. The Python
+    workers get the directory holding this package on their
+    ``PYTHONPATH``, so a UDF that imports it also works when the
+    driver runs from another directory (``extra_conf`` may override
+    it).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -88,6 +95,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

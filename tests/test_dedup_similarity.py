@@ -124,11 +124,9 @@ def test_connected_components_transitive(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], "id_a LONG, id_b LONG"
     )
-    ids = spark.createDataFrame([(i,) for i in [1, 2, 3, 7, 8, 9]], "id LONG")
-    labels = {r["id"]: r["cluster_id"] for r in connected_components(pairs, ids).collect()}
-    assert labels[1] == labels[2] == labels[3] == 1  # chain collapses to min
-    assert labels[7] == labels[8] == 7
-    assert labels[9] == 9  # singleton maps to itself
+    labels = {r["id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
+    # chains collapse to the component min; only endpoints are labeled
+    assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
 
 
 def test_cc_distributed_fallback_matches_union_find(spark):
@@ -141,17 +139,17 @@ def test_cc_distributed_fallback_matches_union_find(spark):
     edges = sorted({(rng.randrange(40), rng.randrange(40)) for _ in range(30)})
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "id_a LONG, id_b LONG")
-    ids = spark.createDataFrame([(i,) for i in range(40)], "id LONG")
     exact = {
-        r["id"]: r["cluster_id"] for r in connected_components(pairs, ids).collect()
+        r["id"]: r["cluster_id"] for r in connected_components(pairs).collect()
     }
     prop = {
         r["id"]: r["cluster_id"]
         for r in connected_components(
-            pairs, ids, driver_edge_limit=0, max_iter=50
+            pairs, driver_edge_limit=0, max_iter=50
         ).collect()
     }
     assert exact == prop
+    assert set(exact) == {x for e in edges for x in e}  # endpoint labels
 
 
 def _embeddings(spark):
@@ -329,10 +327,8 @@ def test_cc_fallback_inside_dedup_clusters_query_path(spark):
             .collect()
         }
 
-    driver_path = clusters(connected_components(pairs, None))
-    distributed = clusters(
-        connected_components(pairs, None, driver_edge_limit=0)
-    )
+    driver_path = clusters(connected_components(pairs))
+    distributed = clusters(connected_components(pairs, driver_edge_limit=0))
     assert driver_path == distributed
     assert len(driver_path) > 0  # sf0.001 has planted near-dup clusters
 
@@ -422,8 +418,12 @@ def test_embedding_pairs_empty_corpus_both_paths(spark):
 
 def _dup_corpus(spark):
     """Dup groups of every awkward shape: m=3 and m=2 text groups,
-    empty-string dups, NULL dups, single-token dups (no bigrams)."""
+    empty-string dups, NULL dups, single-token dups (no bigrams), and
+    two different texts with one bigram set (-2/-1: the gram-set
+    collapse groups them, the byte collapse does not)."""
     rows = [
+        (-2, "p q p q p"),
+        (-1, "p q p q p q"),
         (0, "the quick brown fox jumps over the lazy dog"),
         (1, "the quick brown fox jumps over the lazy dog"),
         (2, "the quick brown fox jumps over the lazy dog"),
@@ -503,7 +503,7 @@ def test_exact_collapse_intra_pairs_minhash_simhash(
             d, shingle_n=2, jaccard_max_distance=0.5, num_hash_tables=8
         ).collect()
     }
-    for pair in [(0, 1), (0, 2), (1, 2), (4, 5)]:
+    for pair in [(0, 1), (0, 2), (1, 2), (4, 5), (-2, -1)]:
         assert mh[pair] == 0.0
     assert not any(a >= 6 for a, _ in mh)  # no shingles -> no bands
     sh = {
@@ -742,14 +742,25 @@ def test_brute_cap_admits_bounded_queries(spark):
     assert out.count() > 0
 
 
-def test_brute_null_ids_dropped_both_sides(spark):
+def _null_id_topk(kernel, corpus, queries):
+    from llm_batch_processor_spark.operators import similarity as sim
+
+    if kernel == "brute":
+        return sim.brute_force_topk(corpus, queries, k=5, dim=4)
+    if kernel == "lsh":
+        # full probe: every bucket, so only the NULL-id drop can prune
+        return sim.lsh_query_topk(corpus, queries, k=5, n_planes=4, n_flip=4, dim=4)
+    # IVF is all-pairs: the corpus is its own query side
+    return sim.ivf_topk(corpus, k=5, n_cells=2, n_probe=2, dim=4)
+
+
+@pytest.mark.parametrize("kernel", ["brute", "lsh", "ivf"])
+def test_brute_null_ids_dropped_both_sides(spark, kernel):
     """ADVICE r10: the pre-r10 SQL exclusion ``neighbor_id != query_id``
     dropped NULL-id rows on both sides (NULL compare -> filtered); the
-    numpy mask kept them. Pin the restored contract."""
-    from llm_batch_processor_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
+    numpy mask kept them. Pin the restored contract on every top-k
+    kernel — LSH and IVF used to return NULL-id neighbors, queries and
+    even a (NULL, NULL) self-pair."""
     vec = [float(i) for i in range(4)]
     corpus = spark.createDataFrame(
         [(1, vec), (2, [2.0, 1.0, 0.0, 1.0]), (None, [1.0] * 4)],
@@ -759,7 +770,7 @@ def test_brute_null_ids_dropped_both_sides(spark):
         [(1, vec), (None, vec)],
         "query_id bigint, embedding array<float>",
     )
-    rows = brute_force_topk(corpus, queries, k=5, dim=4).collect()
+    rows = _null_id_topk(kernel, corpus, queries).collect()
     assert rows  # query 1 scores the non-NULL corpus
     assert all(r["neighbor_id"] is not None for r in rows)
     assert all(r["query_id"] is not None for r in rows)
@@ -818,3 +829,131 @@ def test_triangles_orientation_exact_on_hub_graph(spark, tmp_path):
     expected = {(d, n) for d, n in tri_count.items() if n >= 1}
     assert out == expected
     assert expected  # non-degenerate: the fixture really has triangles
+
+
+# ---------------------------------------------------------------------------
+# pair multiplicities: the exact-Jaccard kernel's pair rows carry both
+# endpoints' collapse group sizes (m_a, m_b), so graph consumers
+# (collapsed_degree_nodes, graph_triangles) read them off the edge
+# instead of re-joining the survivors frame (guide §2.4).
+# ---------------------------------------------------------------------------
+
+# a material clique (6 copies: C(6,2)=15 extra pairs > 9 rows, so the
+# collapse gate fires) plus a near-dup and unrelated filler
+_CLIQUE = "the quick brown fox jumps over the lazy dog again and again"
+_CLIQUE_DOCS = [(i, _CLIQUE) for i in range(6)] + [
+    (6, "the quick brown fox jumps over the lazy cat again and again"),
+    (7, "spark shuffles partitions across executors with adaptive query"),
+    (8, "completely different content about embeddings and vectors"),
+]
+
+
+def _clique_docs(spark):
+    return spark.createDataFrame(_CLIQUE_DOCS, "doc_id LONG, text STRING")
+
+
+def _surv_m(surv):
+    return {r["id"]: r["m"] for r in surv.collect()}
+
+
+def test_pairs_carry_multiplicities_dense_path(spark):
+    from llm_batch_processor_spark.operators.dedup import (
+        ngram_jaccard_pairs_collapsed,
+    )
+
+    # tiny vocab -> dense/blocked kernel; the 6-copy clique makes the
+    # collapse material, so reps carry m > 1
+    rep_pairs, _members, surv, collapsed = ngram_jaccard_pairs_collapsed(
+        _clique_docs(spark), n=2, min_jaccard=0.2
+    )
+    assert collapsed is True
+    assert {"m_a", "m_b"}.issubset(set(rep_pairs.columns))
+    m_of = _surv_m(surv)
+    rows = rep_pairs.collect()
+    assert rows, "fixture must produce at least one rep pair"
+    for r in rows:
+        assert r["m_a"] == m_of[r["id_a"]], r
+        assert r["m_b"] == m_of[r["id_b"]], r
+    assert any(r["m_a"] == 6 or r["m_b"] == 6 for r in rows)
+
+
+def test_pairs_carry_multiplicities_posting_path(spark):
+    from llm_batch_processor_spark.operators.dedup import (
+        ngram_jaccard_pairs_collapsed,
+    )
+
+    # dense_vocab_limit=0 with sparse postings (avg df <= 8 on this
+    # fixture) routes to the AllPairs prefix-filter branch
+    rep_pairs, _members, surv, _collapsed = ngram_jaccard_pairs_collapsed(
+        _clique_docs(spark), n=2, min_jaccard=0.2, dense_vocab_limit=0
+    )
+    m_of = _surv_m(surv)
+    rows = rep_pairs.collect()
+    assert rows, "fixture must produce at least one rep pair"
+    for r in rows:
+        assert r["m_a"] == m_of[r["id_a"]], r
+        assert r["m_b"] == m_of[r["id_b"]], r
+
+
+def test_degree_nodes_match_expanded_edge_degrees(spark):
+    """collapsed_degree_nodes' closed form equals the endpoint degrees
+    counted from the EXPANDED pair list (ngram_jaccard_pairs), member
+    by member, on both persist_adj arms."""
+    from collections import Counter
+
+    from llm_batch_processor_spark.operators.dedup import (
+        collapsed_degree_nodes,
+        ngram_jaccard_pairs_collapsed,
+    )
+
+    d = _clique_docs(spark)
+    want = Counter()
+    for r in ngram_jaccard_pairs(d, n=2, min_jaccard=0.2).collect():
+        want[r["id_a"]] += 1
+        want[r["id_b"]] += 1
+    rep_pairs, members, surv, collapsed = ngram_jaccard_pairs_collapsed(
+        d, n=2, min_jaccard=0.2
+    )
+    assert collapsed is True
+    rep_of = {r["id"]: r["rep"] for r in members.collect()}
+    for persist_adj in (False, True):
+        adj, nodes = collapsed_degree_nodes(rep_pairs, surv, persist_adj)
+        deg_of = {r["g"]: (r["m"], r["deg"]) for r in nodes.collect()}
+        if persist_adj:
+            adj.unpersist()
+        got = {i: deg_of[g][1] for i, g in rep_of.items() if g in deg_of}
+        assert got == dict(want), persist_adj
+        # the clique rep (id 0, m=6): 5 intra neighbors + the near-dup
+        assert deg_of[0] == (6, 6), persist_adj
+
+
+def test_ivf_query_pred_equals_post_filter(spark):
+    """ivf_topk(query_pred=...) must return exactly the post-filtered
+    result of the unrestricted call (per-query top-k independence)."""
+    import numpy as np
+
+    from llm_batch_processor_spark.operators.similarity import ivf_topk
+    from llm_batch_processor_spark.tables import load
+
+    e = load(spark, SF, "embeddings")
+    rng = np.random.RandomState(7)
+    cents = rng.normal(size=(4, 64))
+    full = {
+        tuple(r)
+        for r in ivf_topk(e, k=3, n_probe=2, dim=64, centroids=cents)
+        .filter(F.col("query_id") < 10)
+        .collect()
+    }
+    pushed = {
+        tuple(r)
+        for r in ivf_topk(
+            e,
+            k=3,
+            n_probe=2,
+            dim=64,
+            centroids=cents,
+            query_pred=F.col("vec_id") < 10,
+        ).collect()
+    }
+    assert pushed == full
+    assert pushed  # sf0.001 has >= 10 embeddable vectors

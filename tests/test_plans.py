@@ -8,6 +8,8 @@ regression here is a silent 10-100x at scale even with green results.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from llm_batch_processor_spark.plans import (
@@ -59,6 +61,16 @@ def test_warm_build_stays_within_job_budget(spark, qs, count_jobs):
         _, fired[name] = count_jobs(lambda: _df(qs, name, spark))
     over = {n: j for n, j in fired.items() if j > _BUILD_JOB_BUDGET[n]}
     assert not over, over
+
+
+def test_minhash_signature_stage_runs_no_python_before_band_keys(spark, qs):
+    # the gram sets come from the native shingle_hashes, so the band-key
+    # UDF is the only Python the MinHash signature stage evaluates
+    plan = formatted_plan(_df(qs, "dedup_minhash", spark))
+    udfs = re.findall(
+        r"\) ArrowEvalPython\n(?:Input[^\n]*\n)?Arguments: \[(\w+)\(", plan
+    )
+    assert udfs and set(udfs) == {"band_keys_fn"}, udfs
 
 
 def test_filter_pushdown_reaches_parquet(spark, qs):

@@ -98,7 +98,7 @@ def test_cc_bcast_gate_shut_labels_identical(spark):
             return {
                 (r["id"], r["cluster_id"])
                 for r in dedup.connected_components(
-                    pairs, None, driver_edge_limit=0
+                    pairs, driver_edge_limit=0
                 ).collect()
             }
         finally:
@@ -110,7 +110,7 @@ def test_cc_bcast_gate_shut_labels_identical(spark):
     # and both agree with the driver union-find path
     exact = {
         (r["id"], r["cluster_id"])
-        for r in dedup.connected_components(pairs, None).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
     assert bcast == exact
 

@@ -133,7 +133,7 @@ def test_checkpoint_dir_reliable_path_identical_labels(spark, tmp_path):
     # driver_edge_limit=0 forces the distributed label-propagation path
     base = {
         (r["id"], r["cluster_id"])
-        for r in connected_components(pairs, None, driver_edge_limit=0).collect()
+        for r in connected_components(pairs, driver_edge_limit=0).collect()
     }
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
@@ -141,9 +141,7 @@ def test_checkpoint_dir_reliable_path_identical_labels(spark, tmp_path):
     try:
         got = {
             (r["id"], r["cluster_id"])
-            for r in connected_components(
-                pairs, None, driver_edge_limit=0
-            ).collect()
+            for r in connected_components(pairs, driver_edge_limit=0).collect()
         }
         assert got == base == {
             (1, 1), (2, 1), (3, 1),
@@ -223,7 +221,7 @@ def test_collapsed_degree_nodes_persist_flag(spark):
     from llm_batch_processor_spark.operators.dedup import collapsed_degree_nodes
 
     rep_pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "id_a LONG, id_b LONG"
+        [(1, 2, 1, 2), (2, 3, 2, 1)], "id_a LONG, id_b LONG, m_a LONG, m_b LONG"
     )
     surv = spark.createDataFrame(
         [(1, 1), (2, 2), (3, 1)], "id LONG, m LONG"
