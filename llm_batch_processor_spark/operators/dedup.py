@@ -56,8 +56,9 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def _checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Cut lineage with the strongest checkpoint the session offers.
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """Cut lineage eagerly with the strongest checkpoint the session
+    offers.
 
     When the caller configured ``SparkContext.setCheckpointDir`` (the
     cluster-mode story: a reliable HDFS/object-store dir that survives
@@ -75,8 +76,8 @@ def _checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     except Exception:
         ckpt_dir = None
     if ckpt_dir:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 # Collapse only when the intra-clique pair mass the collapse AVOIDS
@@ -91,14 +92,18 @@ def _checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
 COLLAPSE_EXTRA_PAIRS_FACTOR = 1.0
 
 
-def _collapse(base: DataFrame, key):
+def _collapse(base: DataFrame, key, solo=None):
     """Collapse the rows of ``base`` (an ``id`` column plus payload)
     that share ``key`` ahead of a signature kernel — gated on a
     duplicate-MASS probe so corpora whose duplication is absent or
     immaterial pay no collapse tax (r6, VERDICT r05 item 2). ``key``
     is a narrow digest Column over ``base``: ``md5(text)`` for byte
     identity (:func:`_collapse_exact`), ``xxhash64(array_sort(gh))``
-    for gram-set identity (:func:`_gram_sets`).
+    for gram-set identity (:func:`_gram_sets`). ``solo`` (optional,
+    a non-NULL boolean Column) marks rows that can never pair (empty
+    gram sets): each is a group of its own in the probe and the
+    window, so they add nothing to the duplicate mass and stay their
+    own reps.
 
     Returns ``(members, reps, n_reps, collapsed)``:
 
@@ -148,8 +153,9 @@ def _collapse(base: DataFrame, key):
     22-628x vs the uniform corpus; collapsed, the clique costs one
     group row until the final pair expansion, which is linear in the
     OUTPUT."""
+    keys = [key] if solo is None else [key, F.when(solo, F.col("id"))]
     stats = (
-        base.groupBy(key.alias("__h"))
+        base.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(
             F.count(F.lit(1)).alias("n_groups"),
@@ -170,7 +176,7 @@ def _collapse(base: DataFrame, key):
     if not material:
         members = base.select("id", F.col("id").alias("rep"))
         return members, base.withColumn("m", F.lit(1)), n_rows, False
-    w = Window.partitionBy(key)
+    w = Window.partitionBy(*keys)
     grouped = (
         base.withColumn("rep", F.min("id").over(w))
         .withColumn("m", F.count(F.lit(1)).over(w))
@@ -323,15 +329,15 @@ def _gram_sets(
     The collapse is on gram-set identity (:func:`_collapse` keyed on
     xxhash64 over the SORTED distinct gram hashes — order-independent;
     collisions in the same |docs|^2/2^64 class the gram hashes already
-    accept; NULL gh folds to one group). Both kernels' outputs are
+    accept). Both kernels' outputs are
     functions of gram sets only: docs with identical sets pair at
     exactly Jaccard 1.0 / distance 0.0 (k/(k+k-k) = 1, the constant the
     intra expansion emits) whether or not they are byte-identical, and
     a MinHash signature is a min over the set. So the set-identity
-    collapse is output-identical to a byte-identity one. Groups whose
-    set is empty (sub-shingle-length or NULL texts) never pair, and
-    their members are absent from ``sets``, so they never expand
-    either.
+    collapse is output-identical to a byte-identity one. Docs whose
+    set is empty (sub-shingle-length or NULL texts) never pair: they
+    are ``solo`` in the collapse (out of the duplicate mass, each its
+    own rep) and absent from ``sets``, so they never expand either.
 
     ``cache=True`` persists the hashed sets ahead of the probe, whose
     job then fills the cache: the raw text is scanned ONCE and every
@@ -347,7 +353,9 @@ def _gram_sets(
     if cache:
         base = base.persist()
     members, reps, n_sets, collapsed = _collapse(
-        base, F.xxhash64(F.array_sort("gh"))
+        base,
+        F.xxhash64(F.array_sort("gh")),
+        solo=F.coalesce(F.size("gh"), F.lit(0)) <= 0,
     )
     if cache and collapsed:
         # the windowed frame _collapse persisted now serves every consumer
@@ -361,9 +369,11 @@ def _gram_sets(
 # ---------------------------------------------------------------------------
 
 
-def _spread(
-    df: DataFrame, n_rows: int, rows_per_task: int = 256, big_threshold: int = 4_000_000
-) -> DataFrame:
+SPREAD_ROWS_PER_TASK = 256
+SPREAD_BIG_ROWS = 4_000_000
+
+
+def _spread(df: DataFrame, n_rows: int) -> DataFrame:
     """Right-size partitioning for the Arrow/Python signature stages.
 
     A small corpus often arrives as 1-2 parquet splits; a pandas_udf
@@ -372,10 +382,10 @@ def _spread(
     defaultParallelism schedules 32 Python workers for ~16 rows each
     (worker startup dominated the whole minhash pipeline). So:
 
-    - small/medium corpora (<= big_threshold rows) repartition to
-      ``ceil(n / rows_per_task)`` capped at defaultParallelism — enough
-      rows per task to amortize the Arrow worker, every core busy once
-      there's real work;
+    - small/medium corpora (<= ``SPREAD_BIG_ROWS`` rows) repartition
+      to ``ceil(n / SPREAD_ROWS_PER_TASK)`` capped at
+      defaultParallelism — enough rows per task to amortize the Arrow
+      worker, every core busy once there's real work;
     - bigger corpora keep their scan partitioning untouched — a 100 TB
       parquet scan is already thousands of splits wide, and a blanket
       repartition would be a full shuffle of the text payload (or worse,
@@ -384,11 +394,11 @@ def _spread(
     ``n_rows`` is passed in by callers that already count the corpus
     (they all do, for strategy selection) — no ``df.rdd`` hop, which
     forces full physical planning just to read a partition count."""
-    if n_rows > big_threshold:
+    if n_rows > SPREAD_BIG_ROWS:
         return df
     target = min(
         df.sparkSession.sparkContext.defaultParallelism,
-        max(1, -(-n_rows // rows_per_task)),
+        max(1, -(-n_rows // SPREAD_ROWS_PER_TASK)),
     )
     return df.repartition(target)
 

@@ -222,7 +222,6 @@ def _grouped_topk(
     members: DataFrame,
     k: int,
     id_dtype: str,
-    dedup_pairs: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k WITHIN buckets, pairs never materialized.
 
@@ -233,8 +232,9 @@ def _grouped_topk(
     rows. The global top-k over all probed buckets is then a window
     over a tiny frame. The global result is exact over the candidate
     set: any global top-k neighbor is top-k within its own bucket.
-    ``dedup_pairs``: set when a pair can co-occur in several buckets
-    (multi-table LSH) so the window doesn't rank duplicates."""
+    Both callers put each neighbor in one bucket and probe each bucket
+    at most once per query, so a (query, neighbor) pair meets once and
+    the window never ranks a duplicate."""
 
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
@@ -251,8 +251,6 @@ def _grouped_topk(
         .cogroup(members.groupBy("bucket"))
         .applyInPandas(score, _cand_schema(id_dtype))
     )
-    if dedup_pairs:
-        per_bucket = per_bucket.dropDuplicates(["query_id", "neighbor_id"])
     return _rank_topk(per_bucket, k)
 
 
@@ -580,26 +578,19 @@ def candidate_topk(
     from changes.
 
     ``corpus_rows`` (VERDICT r05 item 6 — drop the plan-time count):
-    an UPPER bound on the embeddable corpus row count (int — a raw
-    parquet footer/metadata count is always valid, raw >= embeddable)
-    or ``(lo, hi)`` bounds on it. A bare int is treated as
-    ``(0, n)`` (ADVICE r06): the natural value to have on hand is a
-    footer count, and a footer count passed as an exact count could
-    route to the approximate path while the true embeddable corpus
-    is at/below the gate. Callers that have proven an exact
-    embeddable count pass ``(n, n)``. When the bounds DECIDE the
-    gate, no count job runs at plan time; when they straddle the
+    ``(lo, hi)`` bounds on the embeddable corpus row count. A raw
+    parquet footer count ``n`` is an upper bound only (raw >=
+    embeddable), so it goes in as ``(0, n)``: passed as an exact
+    count it could route to the approximate path while the true
+    embeddable corpus is at/below the gate. Callers that have proven
+    an exact embeddable count pass ``(n, n)``. When the bounds DECIDE
+    the gate, no count job runs at plan time; when they straddle the
     gate (or are absent) one exact count of the EMBEDDABLE corpus
     decides it (the same predicate the kernels filter by — ADVICE
     r05: a raw count includes null/zero-norm/non-finite/ragged rows).
     The gate never routes to the APPROXIMATE path on an upper bound
     alone — an inflated hint can only keep it exact."""
-    if isinstance(corpus_rows, int):
-        lo, hi = 0, corpus_rows
-    elif corpus_rows is not None:
-        lo, hi = corpus_rows
-    else:
-        lo, hi = None, None
+    lo, hi = corpus_rows or (None, None)
     if hi is not None and hi <= ANN_CANDIDATE_GATE:
         n = hi
     elif lo is not None and lo > ANN_CANDIDATE_GATE:

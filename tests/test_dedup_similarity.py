@@ -514,6 +514,26 @@ def test_exact_collapse_intra_pairs_minhash_simhash(
         assert sh[pair] == 0
 
 
+def test_gram_sets_leave_empty_sets_out_of_the_collapse(spark, monkeypatch):
+    """Empty gram sets (NULL, empty and single-token texts at n=2) never
+    pair, so they add no duplicate mass: the default gate skips the
+    collapse on the dup-group corpus. Forced, each stays its own rep."""
+    from llm_batch_processor_spark.operators import dedup as _dd
+
+    d = _dup_corpus(spark)
+    _, _, n_sets, collapsed = _dd._gram_sets(d, "doc_id", "text", 2)
+    assert (collapsed, n_sets) == (False, 14)
+    monkeypatch.setattr(_dd, "COLLAPSE_EXTRA_PAIRS_FACTOR", -1.0)
+    members, sets, n_sets, collapsed = _dd._gram_sets(d, "doc_id", "text", 2)
+    rep = {r["id"]: r["rep"] for r in members.collect()}
+    assert collapsed
+    assert {i: rep[i] for i in range(6, 12)} == {i: i for i in range(6, 12)}
+    assert (rep[-1], rep[1], rep[2], rep[5]) == (-2, 0, 0, 4)
+    # four non-empty sets plus the six solo docs
+    assert n_sets == 10
+    assert sorted(r["id"] for r in sets.collect()) == [-2, 0, 3, 4]
+
+
 @pytest.mark.parametrize("collapse_factor", [1.0, -1.0])
 def test_collapsed_triangle_counts_match_bruteforce(
     spark, tmp_path, monkeypatch, collapse_factor

@@ -38,6 +38,12 @@ def _df(qs, name, spark):
     return qs[name].fn(spark, SF)
 
 
+@pytest.fixture(scope="module")
+def built(spark, qs):
+    """Every declared query built once, for the full-inventory sweeps."""
+    return {name: qd.fn(spark, SF) for name, qd in qs.items()}
+
+
 # Upper bound on the Spark jobs a query fires while it is BUILT (before
 # any action), with tables.load's schema memo warm: schema inference is
 # then gone, so what is left are the query's own eager side jobs
@@ -317,30 +323,29 @@ _SINGLE_PARTITION_WINDOW_ALLOWED = {
 }
 
 
-def test_single_partition_windows_are_allowlisted_and_exact(spark, qs):
+def test_single_partition_windows_are_allowlisted_and_exact(built):
     """Sweep EVERY declared query: an unpartitioned Window on a
     data-proportional input is the canonical silent scale-killer (the
     whole dataset streams through ONE task). Exact-set equality: a new
     query planning one must document its bounded frame here, and a
     stale allowlist entry (query no longer plans one) must be pruned
     so the pin stays meaningful."""
-    actual = set()
-    for name, qd in qs.items():
-        if single_partition_window_count(qd.fn(spark, SF)) > 0:
-            actual.add(name)
+    actual = {
+        name for name, df in built.items()
+        if single_partition_window_count(df) > 0
+    }
     assert actual == _SINGLE_PARTITION_WINDOW_ALLOWED, {
         "unallowlisted": sorted(actual - _SINGLE_PARTITION_WINDOW_ALLOWED),
         "stale": sorted(_SINGLE_PARTITION_WINDOW_ALLOWED - actual),
     }
 
 
-def test_no_query_plans_unbounded_nested_loop(spark, qs):
+def test_no_query_plans_unbounded_nested_loop(built):
     # sweep EVERY declared query: an accidental BroadcastNestedLoopJoin
     # or CartesianProduct is the classic silent 100x at scale. The
     # allowlist above names the documented exact kernels.
     offenders = {}
-    for name, qd in qs.items():
-        df = qd.fn(spark, SF)
+    for name, df in built.items():
         plan = formatted_plan(df)
         bad = [
             op
@@ -352,14 +357,13 @@ def test_no_query_plans_unbounded_nested_loop(spark, qs):
     assert not offenders, offenders
 
 
-def test_no_query_uses_row_at_a_time_python(spark, qs):
+def test_no_query_uses_row_at_a_time_python(built):
     # BatchEvalPython = row-at-a-time Python UDF serialization — banned:
     # the only Python in this engine is Arrow-batched (ArrowEvalPython /
     # MapInPandas / cogroups) or the inherently-external LLM call
     offenders = []
-    for name, qd in qs.items():
-        plan = formatted_plan(qd.fn(spark, SF))
-        if ") BatchEvalPython" in plan:
+    for name, df in built.items():
+        if ") BatchEvalPython" in formatted_plan(df):
             offenders.append(name)
     assert not offenders, offenders
 

@@ -191,28 +191,14 @@ def test_candidate_topk_bounds_decide_gate_without_count(spark, monkeypatch):
     )
     assert set(got_lsh.columns) == {"query_id", "neighbor_id", "rank"}
     monkeypatch.undo()
-    # bounds that straddle the gate fall back to one exact count
+    # bounds that straddle the gate fall back to one exact count: a raw
+    # footer count above the gate, passed as (0, n), never routes to
+    # the approximate path by itself
     got2 = sim.candidate_topk(
         vecs, queries, k=2, dim=8,
         corpus_rows=(0, sim.ANN_CANDIDATE_GATE + 1),
     ).collect()
     assert {r["neighbor_id"] for r in got2} == {r["neighbor_id"] for r in got}
-    # a bare int is an UPPER bound (ADVICE r06): a raw footer count
-    # above the gate must NOT route to the approximate path by itself
-    # — it straddles, so one exact embeddable count decides (and the
-    # tiny true corpus keeps it exact)
-    got3 = sim.candidate_topk(
-        vecs, queries, k=2, dim=8, corpus_rows=sim.ANN_CANDIDATE_GATE + 1
-    ).collect()
-    assert {r["neighbor_id"] for r in got3} == {r["neighbor_id"] for r in got}
-    # ... while an int at/below the gate still decides exact with zero
-    # count jobs
-    monkeypatch.setattr(DataFrame, "count", boom)
-    got4 = sim.candidate_topk(
-        vecs, queries, k=2, dim=8, corpus_rows=sim.ANN_CANDIDATE_GATE
-    ).collect()
-    monkeypatch.undo()
-    assert {r["neighbor_id"] for r in got4} == {r["neighbor_id"] for r in got}
 
 
 def test_collapsed_degree_nodes_persist_flag(spark):

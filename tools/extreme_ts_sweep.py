@@ -15,31 +15,21 @@ Injects (on ~10%% of rows, cycling): events.ts in
 {9999-12-31, 0001-01-01, 2262-04-12 (just past ns-max),
 1677-09-21 (just before ns-min), 1970-01-01} and
 orders.o_orderdate / lineitem.l_shipdate in {0001-01-01, 9999-12-31}.
-Runs every declared query with .count(); contract: no crash.
-
-Usage: python tools/extreme_ts_sweep.py [--only name[,name...]]
+The ``extremets`` row of ``tools/robustness_matrix.py`` runs the full
+oracle gate over this corpus.
 """
 
 from __future__ import annotations
 
-import argparse
-import shutil
-import sys
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
+from tools.payload_sweeps import copy_unchanged
 
 
 def build_dataset(src: str, dst: Path) -> None:
     import duckdb
 
     con = duckdb.connect()
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "documents", "embeddings",
-    ):
-        shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
     con.sql(
         f"""COPY (SELECT event_id,
           CASE event_id % 50
@@ -71,17 +61,5 @@ def build_dataset(src: str, dst: Path) -> None:
           TO '{dst}/lineitem.parquet' (FORMAT PARQUET)"""
     )
     con.close()
+    copy_unchanged(src, dst)
 
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--only", default=None)
-    args = ap.parse_args()
-    from tools.sweeplib import run_sweep
-
-    return run_sweep(build_dataset, args.only, args.sf)
-
-
-if __name__ == "__main__":
-    sys.exit(main())

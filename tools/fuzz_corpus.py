@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Seeded random-corpus fuzzer — the r5-r8 hazard domains mechanized
 (VERDICT r8 item 1).
 
@@ -15,10 +14,11 @@ the ones nobody thought to hand-build.
 Contract per seed: keys stay UNIQUE (the dupkeys contract class is a
 separate typed matrix row) and every table keeps non-degenerate
 pristine mass (hazard lanes are sparse, moduli >= 7 for payload axes),
-so the FULL oracle gate is the bar — the same 269/0/5 as pristine.
+so the FULL oracle gate is the bar — the same 271/0/5 as pristine.
 
-Value pools are the proven ones from tools/payload_sweeps.py /
-extreme_ts_sweep.py / nonfinite_sweep.py / ragged_dim_sweep.py —
+Value pools are the proven ones from the hand-built corpus builders
+(tools/payload_sweeps.py, extreme_ts_sweep.py, nonfinite_sweep.py,
+ragged_dim_sweep.py) —
 including their documented structural bounds (money over-rail 1e13
 TRY_CASTs to NULL identically in both engines; the huge int lane is
 int64max/1e6 so corpus SUMs stay inside int64; pandas-written NaN
@@ -26,30 +26,19 @@ vector dims arrive as parquet NULL elements). What the fuzzer adds is
 the seeded COMPOSITION of those pools.
 
 Usage:
-    python tools/fuzz_corpus.py --seed 3            # build + selfcheck
-    python tools/fuzz_corpus.py --seeds 5           # seeds 0..4
-    python tools/fuzz_corpus.py --seed 3 --keep DIR # build only
-    python tools/robustness_matrix.py --rows fuzz --seeds 5
+    python tools/robustness_matrix.py --rows fuzz --seeds 5   # seeds 0..4
+    # one corpus, one query: build_fuzz(SRC, DIR, seed), then
+    python tools/selfcheck.py --sf DIR --only q
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import shutil
-import subprocess
-import sys
-import tempfile
-import time
 from pathlib import Path
 
 import numpy as np
 
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
-
-from tools.payload_sweeps import HOSTILE_TEXTS  # noqa: E402
-from tools.ragged_dim_sweep import BAD_PROPS, RAGGED_DIMS  # noqa: E402
+from tools.payload_sweeps import HOSTILE_TEXTS, copy_unchanged
+from tools.ragged_dim_sweep import BAD_PROPS, RAGGED_DIMS
 
 I64 = 9223372036854775807
 
@@ -365,14 +354,10 @@ def build_fuzz(src: str, dst: Path, seed: int) -> dict:
                 {order_by(keycol)})
                 TO '{dst}/{table}.parquet' (FORMAT PARQUET)"""
         )
-    for t in ("region", "nation"):
-        shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
     con.close()
 
     # ---- embeddings (pandas: NaN dims arrive as parquet NULL elements,
     # the shape real ingested embeddings have — nonfinite-domain note) ----
-    import pandas as pd
-
     emb = pd.read_parquet(f"{src}/embeddings.parquet")
     if plan["rowperm"]:
         import hashlib
@@ -424,68 +409,6 @@ def build_fuzz(src: str, dst: Path, seed: int) -> dict:
         for v in vids
     ]
     emb.to_parquet(str(dst / "embeddings.parquet"))
+    copy_unchanged(src, dst)
     return plan
 
-
-def run_seed(seed: int, sf: str, keep: str | None, only: str = "") -> dict:
-    """Build the seed corpus and run the full oracle gate over it."""
-    tmp = Path(keep) if keep else Path(tempfile.mkdtemp(prefix=f"fuzz{seed}_"))
-    tmp.mkdir(parents=True, exist_ok=True)
-    try:
-        t0 = time.time()
-        plan = build_fuzz(sf, tmp, seed)
-        print(f"seed {seed}: built in {time.time()-t0:.1f}s, plan: "
-              + json.dumps(plan, separators=(",", ":")), flush=True)
-        if keep and only == "-":
-            return {"plan": plan}
-        from tools.robustness_matrix import run_selfcheck
-
-        extra = {}
-        r = run_selfcheck(str(tmp), **extra) if not only else _selfcheck_only(
-            str(tmp), only)
-        r["plan"] = plan
-        return r
-    finally:
-        if not keep:
-            shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _selfcheck_only(sf_dir: str, only: str) -> dict:
-    cmd = [sys.executable, str(REPO / "tools" / "selfcheck.py"),
-           "--sf", sf_dir, "--only", only]
-    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=str(REPO))
-    print(proc.stdout[-3000:])
-    return {"exit": proc.returncode}
-
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--seed", type=int, default=None)
-    ap.add_argument("--seeds", type=int, default=0,
-                    help="run seeds 0..N-1 (the matrix-row form)")
-    ap.add_argument("--keep", default="",
-                    help="build into this dir and keep it (debugging)")
-    ap.add_argument("--only", default="",
-                    help="selfcheck only these queries; '-' = build only")
-    args = ap.parse_args()
-
-    seeds = list(range(args.seeds)) if args.seeds else [args.seed or 0]
-    bad = 0
-    for s in seeds:
-        r = run_seed(s, args.sf, args.keep or None, args.only)
-        if "pass" in r:
-            print(f"seed {s}: {r['pass']}/{r['fail']}/{r['rows_only']}"
-                  + (f"/{r['contract']}c" if r.get("contract") else "")
-                  + f" ({r['sec']}s)"
-                  + (f" failures={r['failures']}" if r["failures"] else ""),
-                  flush=True)
-            if r["fail"] or r.get("contract"):
-                bad += 1
-        elif r.get("exit"):
-            bad += 1
-    return 1 if bad else 0
-
-
-if __name__ == "__main__":
-    sys.exit(main())

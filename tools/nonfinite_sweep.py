@@ -11,35 +11,22 @@ Builds a sweep dataset from sf0.001 with:
   - embeddings: ~1/8 of rows get NaN in one dim, 1/8 get +Inf, 1/8 get
     -Inf, 1/16 get an ALL-NaN vector, 1/16 an all-zero vector (0-norm).
   - events.value: cycle of NaN / +Inf / -Inf / huge (1e308) on ~1/4 rows.
-Runs every declared query with .count(); reports crashers. Contract:
-no query may crash (correct handling of non-finite mass is per-query
-semantics; crash-freedom is the global bar).
-
-Usage: python tools/nonfinite_sweep.py [--only name[,name...]]
+The ``nonfinite`` row of ``tools/robustness_matrix.py`` runs the full
+oracle gate over this corpus.
 """
 
 from __future__ import annotations
 
-import argparse
 import math
-import shutil
-import sys
 from pathlib import Path
 
 import numpy as np
 import pandas as pd
 
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
+from tools.payload_sweeps import copy_unchanged
 
 
 def build_dataset(src: str, dst: Path) -> None:
-    for t in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents",
-    ):
-        shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
-
     emb = pd.read_parquet(f"{src}/embeddings.parquet")
     rng = np.random.default_rng(7)
     vecs = [np.array(v, dtype=np.float32) for v in emb["embedding"]]
@@ -67,17 +54,5 @@ def build_dataset(src: str, dst: Path) -> None:
         vals[i] = bad[(i // 4) % 4]
     ev["value"] = vals
     ev.to_parquet(str(dst / "events.parquet"))
+    copy_unchanged(src, dst)
 
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--only", default=None)
-    args = ap.parse_args()
-    from tools.sweeplib import run_sweep
-
-    return run_sweep(build_dataset, args.only, args.sf)
-
-
-if __name__ == "__main__":
-    sys.exit(main())

@@ -1,25 +1,20 @@
-"""Re-runnable builders for the r5 payload sweeps that originally ran
-as in-process one-offs: NULL payloads, hostile text, empty tables,
-pathological key skew.
+"""Hostile-corpus builders: NULL payloads, hostile text, empty tables,
+pathological key skew, duplicate keys, extreme keys/money/ints and the
+combined-hazard corpus.
 
-All three now share the full-materialization harness (tools/sweeplib —
-``toPandas``, never ``count()``), closing the column-pruning blind spot
-the ragged sweep exposed: counting lets Catalyst prune the very result
-expressions that crash.
-
-Usage: python tools/payload_sweeps.py --mode nulls|hostile|empty|skew
-                                      [--only name[,name...]]
+Each ``build_<name>(src, dst)`` writes into ``dst`` the tables it
+mutates and ends with :func:`copy_unchanged`, which copies every other
+table from ``src``. ``tools/robustness_matrix.py`` runs the full oracle
+gate (``tools/selfcheck.py``, which materializes every result with
+``toPandas()``) over each corpus as one matrix row.
 """
 
 from __future__ import annotations
 
-import argparse
 import shutil
-import sys
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
+from llm_batch_processor_spark.tables import TABLE_NAMES
 
 HOSTILE_TEXTS = [
     "ordinary ascii words repeated words repeated words for baseline",
@@ -39,10 +34,14 @@ HOSTILE_TEXTS = [
     "url https://ex.am/ple?q=1&r=2#frag and email a.b@c-d.ef in text",
 ]
 
-ALL_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
+
+def copy_unchanged(src: str, dst: Path) -> None:
+    """Copy from ``src`` every ``TABLE_NAMES`` table the builder did not
+    write into ``dst``, so each corpus holds the full schema."""
+    for t in TABLE_NAMES:
+        out = Path(dst) / f"{t}.parquet"
+        if not out.exists():
+            shutil.copy(f"{src}/{t}.parquet", str(out))
 
 
 def build_nulls(src: str, dst: Path) -> None:
@@ -75,9 +74,7 @@ def build_nulls(src: str, dst: Path) -> None:
             TO '{dst}/embeddings.parquet' (FORMAT PARQUET)"""
     )
     con.close()
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem"):
-        shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
+    copy_unchanged(src, dst)
 
 
 def build_hostile(src: str, dst: Path) -> None:
@@ -85,9 +82,6 @@ def build_hostile(src: str, dst: Path) -> None:
     (the r5 hostile-text sweep dataset)."""
     import pandas as pd
 
-    for t in ALL_TABLES:
-        if t != "documents":
-            shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
     rows = [
         {
             "doc_id": i,
@@ -99,6 +93,7 @@ def build_hostile(src: str, dst: Path) -> None:
         for i, t in enumerate(HOSTILE_TEXTS)
     ]
     pd.DataFrame(rows).to_parquet(str(dst / "documents.parquet"))
+    copy_unchanged(src, dst)
 
 
 def build_skew(src: str, dst: Path) -> None:
@@ -151,8 +146,7 @@ def build_skew(src: str, dst: Path) -> None:
             TO '{dst}/orders.parquet' (FORMAT PARQUET)"""
     )
     con.close()
-    for t in ("region", "nation", "customer", "supplier", "part"):
-        shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
+    copy_unchanged(src, dst)
 
 
 def build_empty(src: str, dst: Path) -> None:
@@ -161,7 +155,7 @@ def build_empty(src: str, dst: Path) -> None:
     import duckdb
 
     con = duckdb.connect()
-    for t in ALL_TABLES:
+    for t in TABLE_NAMES:
         con.sql(
             f"""COPY (SELECT * FROM '{src}/{t}.parquet' WHERE 1 = 0)
                 TO '{dst}/{t}.parquet' (FORMAT PARQUET)"""
@@ -214,9 +208,8 @@ def build_dupkeys(src: str, dst: Path) -> None:
             FROM '{src}/orders.parquet')
             TO '{dst}/orders.parquet' (FORMAT PARQUET)"""
     )
-    for t in ("region", "nation", "customer", "supplier", "part", "lineitem"):
-        shutil.copy(Path(src) / f"{t}.parquet", dst / f"{t}.parquet")
     con.close()
+    copy_unchanged(src, dst)
 
 
 def build_extremekeys(src: str, dst: Path) -> None:
@@ -272,9 +265,8 @@ def build_extremekeys(src: str, dst: Path) -> None:
             FROM '{src}/lineitem.parquet')
             TO '{dst}/lineitem.parquet' (FORMAT PARQUET)"""
     )
-    for t in ("region", "nation", "customer", "supplier", "part"):
-        shutil.copy(Path(src) / f"{t}.parquet", dst / f"{t}.parquet")
     con.close()
+    copy_unchanged(src, dst)
 
 
 def build_extrememoney(src: str, dst: Path) -> None:
@@ -376,8 +368,7 @@ def build_extrememoney(src: str, dst: Path) -> None:
             TO '{dst}/embeddings.parquet' (FORMAT PARQUET)"""
     )
     con.close()
-    for t in ("region", "nation", "documents"):
-        shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
+    copy_unchanged(src, dst)
 
 
 def build_extremeints(src: str, dst: Path) -> None:
@@ -422,9 +413,7 @@ def build_extremeints(src: str, dst: Path) -> None:
             TO '{dst}/part.parquet' (FORMAT PARQUET)"""
     )
     con.close()
-    for t in ("region", "nation", "customer", "supplier", "orders",
-              "lineitem", "events", "embeddings"):
-        shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
+    copy_unchanged(src, dst)
 
 
 def build_combined(src: str, dst: Path) -> None:
@@ -533,8 +522,6 @@ def build_combined(src: str, dst: Path) -> None:
             TO '{dst}/lineitem.parquet' (FORMAT PARQUET)"""
     )
     con.close()
-    for t in ("region", "nation", "customer", "supplier", "part"):
-        shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
 
     # embeddings + the events value/props lanes mirror the nonfinite /
     # ragged builders byte-for-byte (same seeds, same cycles) so the
@@ -590,31 +577,5 @@ def build_combined(src: str, dst: Path) -> None:
             props[i] = BAD_PROPS[(i // 5) % len(BAD_PROPS)]
     ev["props"] = props
     ev.to_parquet(str(dst / "events.parquet"))
+    copy_unchanged(src, dst)
 
-
-BUILDERS = {
-    "nulls": build_nulls,
-    "hostile": build_hostile,
-    "empty": build_empty,
-    "skew": build_skew,
-    "dupkeys": build_dupkeys,
-    "extremekeys": build_extremekeys,
-    "extrememoney": build_extrememoney,
-    "extremeints": build_extremeints,
-    "combined": build_combined,
-}
-
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--mode", required=True, choices=sorted(BUILDERS))
-    ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--only", default=None)
-    args = ap.parse_args()
-    from tools.sweeplib import run_sweep
-
-    return run_sweep(BUILDERS[args.mode], args.only, args.sf)
-
-
-if __name__ == "__main__":
-    sys.exit(main())

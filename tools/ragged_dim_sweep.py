@@ -14,38 +14,25 @@ along. Two engine hazards:
 
 Injects into embeddings (~1/8 of rows, cycling dims 0/1/32/63/65/128)
 and events.props (~1/5 of rows, cycling ``not json{`` / empty string /
-``[]`` / ``{"a":{"b":{"c":1}}}`` / bare number). Runs every declared
-query with .count(); contract: no crash.
-
-Usage: python tools/ragged_dim_sweep.py [--only name[,name...]]
+``[]`` / ``{"a":{"b":{"c":1}}}`` / bare number). The ``ragged`` row of
+``tools/robustness_matrix.py`` runs the full oracle gate over this
+corpus.
 """
 
 from __future__ import annotations
 
-import argparse
-import shutil
-import sys
-import tempfile
-import time
 from pathlib import Path
 
 import numpy as np
 import pandas as pd
 
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
+from tools.payload_sweeps import copy_unchanged
 
 RAGGED_DIMS = (0, 1, 32, 63, 65, 128)
 BAD_PROPS = ('not json{', '', '[]', '{"a":{"b":{"c":1}}}', '42')
 
 
 def build_dataset(src: str, dst: Path) -> None:
-    for t in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents",
-    ):
-        shutil.copy(f"{src}/{t}.parquet", str(dst / f"{t}.parquet"))
-
     emb = pd.read_parquet(f"{src}/embeddings.parquet")
     rng = np.random.default_rng(11)
     vecs = list(emb["embedding"])
@@ -61,17 +48,5 @@ def build_dataset(src: str, dst: Path) -> None:
         props[i] = BAD_PROPS[(i // 5) % len(BAD_PROPS)]
     ev["props"] = props
     ev.to_parquet(str(dst / "events.parquet"))
+    copy_unchanged(src, dst)
 
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--only", default=None)
-    args = ap.parse_args()
-    from tools.sweeplib import run_sweep
-
-    return run_sweep(build_dataset, args.only, args.sf)
-
-
-if __name__ == "__main__":
-    sys.exit(main())

@@ -3,11 +3,17 @@
 
 r6 proved the sweep regime finds real bugs (2 engine bugs in the NULL
 corpus alone), so keeping every row green per round is the cheapest
-regression net the project has (VERDICT r6 item 8). This orchestrates
-the five hostile-corpus builders + the three execution-regime
-invariance sweeps + pristine, each as a `tools/selfcheck.py`
-subprocess (own SparkSession — masters/confs can differ per row), and
-prints the ROBUSTNESS.md-ready matrix.
+regression net the project has (VERDICT r6 item 8). This is the one
+runner for every hostile corpus (the builders in
+`tools/payload_sweeps.py`, `extreme_ts_sweep.py`, `nonfinite_sweep.py`,
+`ragged_dim_sweep.py`, `fuzz_corpus.py` and `build_rowperm` below),
+the execution-regime invariance sweeps and pristine: each row is one
+`tools/selfcheck.py` subprocess (own SparkSession — masters/confs can
+differ per row), and the matrix prints ROBUSTNESS.md-ready.
+
+One query on one corpus: call the builder, e.g.
+`build_nulls(SRC, Path(DIR))`, then
+`python tools/selfcheck.py --sf DIR --only q`.
 
 Expected state (276 queries):
   pristine / extreme-ts / extremekeys / nulls / hostile / empty /

@@ -137,6 +137,7 @@ def main() -> int:
 
     import __spark_entry__ as E
     from llm_batch_processor_spark.session import get_spark
+    from llm_batch_processor_spark.tables import TABLE_NAMES
 
     for kv in args.conf:
         if "=" not in kv:
@@ -159,9 +160,7 @@ def main() -> int:
             pass
 
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings".split()
-    ):
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
         )
