@@ -39,6 +39,16 @@ REQUIRED_KEYS = ("id", "erb_filepath", "backend_endpoint", "model", "output_labe
 INLINE_KEYS = ("erb_source", "system_erb_source")
 
 
+# optional scalar keys, coerced to their field's type when present
+_COERCED = {
+    "use_images": bool,
+    "json_mode": bool,
+    "request_timeout": float,
+    "concurrency": int,
+    "max_retries": int,
+}
+
+
 def _resolve(base_dir: str, path: str) -> str:
     """Absolute paths as-is; relative paths against the YAML's dir; '..' normalized."""
     if os.path.isabs(path):
@@ -97,19 +107,16 @@ class JobSpec:
                 else None
             ),
             params=dict(cfg.get("params") or {}),
-            use_images=bool(cfg.get("use_images", False)),
-            json_mode=bool(cfg.get("json_mode", False)),
             json_schema=cfg.get("json_schema"),
             json_schema_filepath=(
                 _resolve(base_dir, str(cfg["json_schema_filepath"]))
                 if cfg.get("json_schema_filepath")
                 else None
             ),
-            request_timeout=float(cfg.get("request_timeout", 240.0)),
-            concurrency=int(cfg.get("concurrency", 8)),
-            max_retries=int(cfg.get("max_retries", 2)),
             erb_source=cfg.get("erb_source"),
             system_erb_source=cfg.get("system_erb_source"),
+            # an absent key keeps the dataclass default
+            **{k: cast(cfg[k]) for k, cast in _COERCED.items() if k in cfg},
         )
         spec._validate_files()
         return spec

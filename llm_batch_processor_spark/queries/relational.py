@@ -6696,6 +6696,8 @@ def period_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM(sxx) AS BIGINT) AS sxx,
              CAST(SUM(syy) AS BIGINT) AS syy
       FROM grouped
+      -- Spark-semantics mirror: empty input -> zero rows (see agg_rollup)
+      HAVING COUNT(*) > 0
     ),
     unioned AS (
       SELECT event_type, n, sx, sy, sxy, sxx, syy FROM grouped
@@ -6750,11 +6752,10 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grouping()=1 marks the total row -> 'ALL'; a genuine NULL
     # event_type group keeps grouping()=0 and stays NULL, exactly as
     # the old union emitted it.
-    # Known divergence on EMPTY input: Spark's rollup emits no rows at
-    # all (not even the grand total), while the oracle's pooled CTE
-    # still yields one 'ALL' row with NULL n and corr. Unreachable
-    # at any generated scale; a fallback union would cost a second
-    # scan on every non-empty run.
+    # Declared semantics are Spark SQL's (see agg_rollup): ROLLUP of an
+    # empty relation is empty, with no 'ALL' row; the oracle's pooled
+    # CTE mirrors that with HAVING COUNT(*) > 0, a no-op on any
+    # non-empty input.
     grouped = fp.rollup("event_type").agg(
         F.grouping("event_type").alias("gid"),
         F.count("*").alias("n"),

@@ -26,15 +26,13 @@ _RUNTIME_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
-# Performance confs that are runtime-settable and safe at every scale.
-# The correctness harness hands us ITS session (stock confs: 200 shuffle
-# partitions, AQE per Spark default) — without AQE coalesce, every
-# multi-shuffle dedup/LSH query at check scale runs hundreds of empty
-# tasks per stage, which measured ~2x slower end-to-end.
+# Performance confs that are runtime-settable and safe at every scale,
+# kept to those whose Spark default differs from the engine's value.
+# AQE (runtime coalesce + skew-join split) is not forced: a stock Spark
+# 4.1 session already has all three AQE flags on, so forcing them would
+# only override a caller that turned AQE off on purpose, and an explicit
+# value is respected here as it is for shuffle partitions below.
 _PERF_CONF = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # UDTFs (text_fragments) evaluate via Arrow batches instead of
     # row-at-a-time pickle round-trips (BatchEvalPythonUDTF)
@@ -44,9 +42,9 @@ _PERF_CONF = {
 
 def ensure_session_conf(spark: SparkSession) -> SparkSession:
     """Idempotently apply runtime confs needed for correct reads, plus
-    scale-neutral perf defaults (AQE, Arrow). A shuffle-partition count
-    left at Spark's stock 200 is right-sized to 2x the session's cores;
-    an explicitly configured value is respected."""
+    the Arrow transfer defaults. A shuffle-partition count left at
+    Spark's stock 200 is right-sized to 2x the session's cores; an
+    explicitly configured value is respected."""
     for k, v in {**_RUNTIME_CONF, **_PERF_CONF}.items():
         try:
             if spark.conf.get(k, None) != v:
@@ -73,13 +71,12 @@ def get_spark(
     """Build a local session tuned for this machine; cluster-safe defaults.
 
     Shuffle partitions default to 2x local cores (on a real cluster,
-    leave AQE to coalesce); AQE (runtime coalesce + skew-join split) and
-    Arrow transfer for the pandas_udf paths come from
-    :func:`ensure_session_conf`, like on any other session. The Python
-    workers get the directory holding this package on their
-    ``PYTHONPATH``, so a UDF that imports it also works when the
-    driver runs from another directory (``extra_conf`` may override
-    it).
+    leave AQE, on by Spark's default, to coalesce); Arrow transfer for
+    the pandas_udf paths comes from :func:`ensure_session_conf`, like on
+    any other session. The Python workers get the directory holding
+    this package on their ``PYTHONPATH``, so a UDF that imports it also
+    works when the driver runs from another directory (``extra_conf``
+    may override it).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")

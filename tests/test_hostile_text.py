@@ -347,13 +347,15 @@ def test_rollup_family_empty_input_is_empty_and_oracle_mirrors(spark, tmp_path):
     build_empty("/root/testdata/sf0.001", d)
     qs = all_queries()
     con = duckdb.connect()
-    for t in ("customer", "nation", "region", "lineitem", "orders"):
+    for t in ("customer", "nation", "region", "lineitem", "orders", "events"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')"
         )
     from __spark_entry__ import oracle_sql
 
     sqls = oracle_sql()
-    for name in ("agg_rollup", "agg_cube", "agg_grouping_sets"):
+    for name in (
+        "agg_rollup", "agg_cube", "agg_grouping_sets", "simpson_paradox_audit"
+    ):
         assert qs[name].fn(spark, str(d)).count() == 0, name  # Spark semantics
         assert len(con.execute(sqls[name]).fetchall()) == 0, name  # mirrored

@@ -37,6 +37,26 @@ def test_correctness_and_perf_confs_applied(spark):
     assert spark.conf.get("spark.sql.execution.pythonUDTF.arrow.enabled") == "true"
 
 
+def test_explicit_aqe_opt_out_survives_heal_and_load(spark):
+    """A caller's AQE opt-out holds through ensure_session_conf and a
+    table load (the healer forces only confs whose Spark default differs
+    from the engine's value), while the session TZ stays forced to UTC."""
+    from conftest import SF_SMOKE
+
+    from llm_batch_processor_spark.tables import load
+
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        ensure_session_conf(spark)
+        load(spark, SF_SMOKE, "region")
+        assert spark.conf.get(key) == "false"
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_python_workers_import_package_from_any_cwd(tmp_path):
     """A driver that puts the checkout on ``sys.path`` and runs from
     another directory must still find the package in its pandas UDF

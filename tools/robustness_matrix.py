@@ -7,9 +7,10 @@ regression net the project has (VERDICT r6 item 8). This is the one
 runner for every hostile corpus (the builders in
 `tools/payload_sweeps.py`, `extreme_ts_sweep.py`, `nonfinite_sweep.py`,
 `ragged_dim_sweep.py`, `fuzz_corpus.py` and `build_rowperm` below),
-the execution-regime invariance sweeps and pristine: each row is one
-`tools/selfcheck.py` subprocess (own SparkSession — masters/confs can
-differ per row), and the matrix prints ROBUSTNESS.md-ready.
+the execution-regime invariance sweeps, the stock driver-owned session
+and pristine: each row is one `tools/selfcheck.py` subprocess (own
+SparkSession — masters/confs can differ per row, and a row's `--conf`
+values hold for every query), and the matrix prints ROBUSTNESS.md-ready.
 
 One query on one corpus: call the builder, e.g.
 `build_nulls(SRC, Path(DIR))`, then
@@ -23,14 +24,15 @@ Expected state (276 queries):
                        KeyContractError, no free-floating divergences;
                        agg_approx_distinct is the one remaining
                        rows-only row there)
-  local4 / noBroadcastNoAQE / noCodegen / tokyo-TZ        271/0/5/0
+  local4 / nobcast (no broadcast, AQE off) / nocodegen /
+  stock (Spark's stock confs, America/New_York TZ)        271/0/5/0
 
 Usage:
     python tools/robustness_matrix.py [--rows r1,r2,...] [--sf DIR]
         [--out MATRIX.json] [--seeds N] [--skip q1,q2]
 Rows: pristine extremets extremekeys nulls hostile dupkeys empty skew
       rowperm nonfinite ragged combined extrememoney extremeints
-      moneysf01 local4 nobcast nocodegen tokyo (default); opt-in via
+      moneysf01 local4 nobcast nocodegen stock (default); opt-in via
       --rows: sf01 (the full gate at sf0.1 pristine, ~20 min), sf1
       (the full gate at the synthetic sf1, 100x the driver compare
       scale — 1-3 h, bounded by a 4 h subprocess timeout; zero
@@ -319,12 +321,20 @@ def main() -> int:
         "nocodegen": lambda: run_selfcheck(
             args.sf, conf=["spark.sql.codegen.factoryMode=NO_CODEGEN"]
         ),
-        # session-timezone invariance (r7): the engine normalizes all
-        # event time to TIMESTAMP_NTZ at scan (tables.load), so results
-        # must not depend on spark.sql.session.timeZone — the contract
-        # a cluster with mixed-TZ driver/executor defaults needs
-        "tokyo": lambda: run_selfcheck(
-            args.sf, conf=["spark.sql.session.timeZone=Asia/Tokyo"]
+        # a session the engine did not build, as the correctness driver
+        # hands it over: Spark's stock shuffle partitions, broadcast
+        # threshold, codec and driver memory, and a non-UTC session TZ.
+        # ensure_session_conf must heal it (UTC, right-sized partitions)
+        # so every query still matches the oracle value for value
+        "stock": lambda: run_selfcheck(
+            args.sf,
+            conf=[
+                "spark.sql.shuffle.partitions=200",
+                "spark.sql.autoBroadcastJoinThreshold=10485760",
+                "spark.sql.parquet.compression.codec=snappy",
+                "spark.driver.memory=1g",
+                "spark.sql.session.timeZone=America/New_York",
+            ],
         ),
         # scale-up parity (r7, opt-in: ~20 min): the full oracle gate at
         # 10x the usual compare scale — catches divergences whose

@@ -128,8 +128,8 @@ def main() -> int:
         action="append",
         default=[],
         metavar="K=V",
-        help="extra Spark conf (repeatable) — used by the "
-        "execution-strategy invariance sweeps, e.g. "
+        help="extra Spark conf (repeatable), set when the session is "
+        "built — the regime and stock rows of robustness_matrix.py, e.g. "
         "--conf spark.sql.autoBroadcastJoinThreshold=-1 "
         "--conf spark.sql.adaptive.enabled=false",
     )
@@ -150,14 +150,7 @@ def main() -> int:
     # it headroom. Must be a BUILD-time conf (TaskSetManager reads it
     # from SparkConf, not the runtime SQL conf).
     extra = {"spark.driver.maxResultSize": "8g", **extra}
-    spark = get_spark(app_name="selfcheck", extra_conf=extra or None)
-    # session-conf hardening force-resets the AQE/Arrow family; an
-    # invariance sweep's explicit --conf must win over the defaults
-    for k, v in extra.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
+    spark = get_spark(app_name="selfcheck", extra_conf=extra)
 
     con = duckdb.connect()
     for t in TABLE_NAMES:
