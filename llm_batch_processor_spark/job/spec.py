@@ -34,11 +34,6 @@ class JobSpecError(ValueError):
 
 REQUIRED_KEYS = ("id", "erb_filepath", "backend_endpoint", "model", "output_label")
 
-# engine extension: inline template sources (no file indirection); when
-# erb_source is present, erb_filepath is not required.
-INLINE_KEYS = ("erb_source", "system_erb_source")
-
-
 # optional scalar keys, coerced to their field's type when present
 _COERCED = {
     "use_images": bool,
@@ -81,6 +76,8 @@ class JobSpec:
 
     @classmethod
     def from_dict(cls, cfg: dict[str, Any], base_dir: str = ".") -> "JobSpec":
+        # engine extension: an inline template source (no file
+        # indirection) stands in for erb_filepath
         required = [
             k
             for k in REQUIRED_KEYS

@@ -29,15 +29,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("format", StringType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
 DECODED_SCHEMA = StructType(
     [
         StructField("media_id", StringType()),

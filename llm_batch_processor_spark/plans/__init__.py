@@ -1,12 +1,9 @@
-"""Physical-plan introspection and scale-posture tooling.
+"""Physical-plan introspection.
 
 ``introspect`` reads the formatted Catalyst plan back out of a DataFrame
 so tests can PIN the execution strategy (filters pushed to parquet,
 columns pruned, small dims broadcast, aggregates partial) instead of
 hoping for it — at 100 TB the plan IS the product.
-
-``tuning`` turns cluster/data shape into the conf knobs that matter at
-scale (shuffle partitions, broadcast threshold, file split sizes).
 """
 
 from .introspect import (
@@ -21,7 +18,6 @@ from .introspect import (
     single_partition_window_count,
     whole_stage_codegen_count,
 )
-from .tuning import recommend_conf
 
 __all__ = [
     "formatted_plan",
@@ -34,5 +30,4 @@ __all__ = [
     "has_take_ordered",
     "single_partition_window_count",
     "whole_stage_codegen_count",
-    "recommend_conf",
 ]

@@ -3,6 +3,9 @@
 Used by bench.py, the CLI, and tests. Driver-provided sessions (the
 correctness harness) are instead *adjusted at runtime* via
 :func:`ensure_session_conf`, which only touches runtime-settable confs.
+Both kinds of session get their shuffle-partition count from one rule,
+applied by :func:`ensure_session_conf`: a stock 200 becomes 2x the
+session's cores, and an explicitly set value is kept.
 """
 
 from __future__ import annotations
@@ -65,29 +68,24 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "llm-batch-processor-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build a local session tuned for this machine; cluster-safe defaults.
 
-    Shuffle partitions default to 2x local cores (on a real cluster,
-    leave AQE, on by Spark's default, to coalesce); Arrow transfer for
-    the pandas_udf paths comes from :func:`ensure_session_conf`, like on
-    any other session. The Python workers get the directory holding
-    this package on their ``PYTHONPATH``, so a UDF that imports it also
-    works when the driver runs from another directory (``extra_conf``
-    may override it).
+    Sets no shuffle-partition count: the closing :func:`ensure_session_conf`
+    call sizes it (2x the session's cores; on a real cluster, leave AQE,
+    on by Spark's default, to coalesce) and keeps a count a caller set,
+    through ``extra_conf`` or on a live session this call reuses. The
+    same call sets the Arrow transfer confs. The Python workers get the
+    directory holding this package on their ``PYTHONPATH``, so a UDF
+    that imports it also works when the driver runs from another
+    directory. ``extra_conf`` is applied last and may override any of
+    these, ``spark.master`` included.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        ncores = os.cpu_count() or 8
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", 2 * ncores))
-
     b = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .master(master or f"local[{cpus}]")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")

@@ -62,8 +62,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Session confs that change the schema parquet inference produces.
 _SCHEMA_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",

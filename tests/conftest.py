@@ -16,7 +16,11 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     from llm_batch_processor_spark.session import get_spark
 
-    spark = get_spark(app_name="pytest", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="pytest",
+        master="local[8]",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     yield spark
     spark.stop()
 

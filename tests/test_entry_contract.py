@@ -45,3 +45,34 @@ def test_every_query_runs_at_smoke_sf(spark):
         df = fn(spark, SF_SMOKE)
         assert df.columns, name
         df.limit(5).collect()
+
+
+def test_selfcheck_canon_digest_properties():
+    """The large-output multiset digest must be order-insensitive,
+    value-sensitive, and consistent with the small-path canon
+    semantics for dtype mismatches."""
+    import pandas as pd
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    from tools.selfcheck import canon_digest
+
+    a = pd.DataFrame({"x": [1, 2, 3], "y": [1.5, float("nan"), -2.0]})
+    perm = a.iloc[[2, 0, 1]].reset_index(drop=True)
+    assert canon_digest(a) == canon_digest(perm)
+    changed = a.copy()
+    changed.loc[1, "x"] = 99
+    assert canon_digest(a) != canon_digest(changed)
+    # column-order insensitivity (columns are sorted by name)
+    swapped = a[["y", "x"]]
+    assert canon_digest(a) == canon_digest(swapped)
+    # int64 vs float64 diverge, same as '3' vs '3.0' in the sorted path
+    floated = a.copy()
+    floated["x"] = floated["x"].astype("float64")
+    assert canon_digest(a) != canon_digest(floated)
+    # object/string columns go through canon_cell
+    s1 = pd.DataFrame({"s": ["a", None, "b"]})
+    s2 = pd.DataFrame({"s": ["b", "a", None]})
+    assert canon_digest(s1) == canon_digest(s2)
+    assert canon_digest(pd.DataFrame({"s": []})) == (0, 0, 0)

@@ -10,6 +10,8 @@ may crash. The full 272-query hostile sweep is run out-of-band
 
 from __future__ import annotations
 
+import datetime
+
 import pandas as pd
 import pytest
 
@@ -359,3 +361,71 @@ def test_rollup_family_empty_input_is_empty_and_oracle_mirrors(spark, tmp_path):
     ):
         assert qs[name].fn(spark, str(d)).count() == 0, name  # Spark semantics
         assert len(con.execute(sqls[name]).fetchall()) == 0, name  # mirrored
+
+
+# Divergence class found by fuzz seeds 8/9 (user/type skew): a
+# degenerate A/B split where EVERY user converts (or none does) makes
+# the pooled p-hat exactly 0 or 1, so SE_pooled is exactly 0.0 —
+# Spark's ANSI division raised DIVIDE_BY_ZERO where DuckDB's IEEE
+# double division yields NaN. Both engines now guard se = 0 to a NULL
+# z (the z-test is undefined at a degenerate split).
+def _degenerate_events(spark, tmp_path, n_users=4, purchases_per_user=20):
+    """Every user has >= 14 purchase events -> pooled conversion = 1."""
+    rows = []
+    t0 = datetime.datetime(2024, 1, 1)
+    eid = 0
+    for u in range(n_users):
+        for k in range(purchases_per_user):
+            rows.append(
+                (
+                    eid,
+                    u,
+                    "purchase",
+                    t0 + datetime.timedelta(minutes=eid),
+                    1.0,
+                    "{}",
+                )
+            )
+            eid += 1
+    df = spark.createDataFrame(
+        rows,
+        "event_id LONG, user_id LONG, event_type STRING, "
+        "ts TIMESTAMP_NTZ, value DOUBLE, props STRING",
+    )
+    out = str(tmp_path / "events.parquet")
+    df.write.mode("overwrite").parquet(out)
+    return str(tmp_path)
+
+
+def test_ab_test_degenerate_split_yields_null_z(spark, tmp_path):
+    from llm_batch_processor_spark.queries import all_queries
+
+    sf_dir = _degenerate_events(spark, tmp_path)
+    rows = all_queries()["ab_test_proportions"].fn(spark, sf_dir).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    # both variants exist and fully convert -> p0 = p1 = 1.0, z NULL
+    assert r["c0"] == r["n0"] and r["c1"] == r["n1"]
+    assert r["p0"] == 1.0 and r["p1"] == 1.0
+    assert r["z"] is None
+
+
+def test_ab_test_oracle_agrees_on_degenerate_split(spark, tmp_path):
+    """The DuckDB oracle must produce the identical NULL-z row."""
+    import duckdb
+    import math
+
+    import __spark_entry__ as entry
+
+    sf_dir = _degenerate_events(spark, tmp_path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/events.parquet/*.parquet')"
+    )
+    pdf = con.execute(entry.oracle_sql()["ab_test_proportions"]).df()
+    assert len(pdf) == 1
+    z = pdf["z"].iloc[0]
+    assert z is None or (isinstance(z, float) and math.isnan(z))
+    assert float(pdf["p0"].iloc[0]) == 1.0
+    assert float(pdf["p1"].iloc[0]) == 1.0

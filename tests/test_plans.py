@@ -19,7 +19,6 @@ from llm_batch_processor_spark.plans import (
     has_take_ordered,
     pushed_filters,
     read_schemas,
-    recommend_conf,
     shuffle_count,
     single_partition_window_count,
     whole_stage_codegen_count,
@@ -397,15 +396,6 @@ def test_bucketed_join_query_has_single_exchange(spark, qs):
         assert shuffle_count(df) == 1, formatted_plan(df)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_recommend_conf_scales():
-    small = recommend_conf(10 * 1024**3, executors=1, cores_per_executor=8)
-    large = recommend_conf(100 * 1024**4, executors=1000, cores_per_executor=4)
-    assert int(small["spark.sql.shuffle.partitions"]) <= 64
-    # 100 TB / 1000 execs: capped at 8x cores, far below bytes/128MiB
-    assert int(large["spark.sql.shuffle.partitions"]) == 32000
-    assert large["spark.sql.adaptive.enabled"] == "true"
 
 
 def test_map_only_queries_have_zero_shuffles(spark, qs):

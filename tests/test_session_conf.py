@@ -29,12 +29,42 @@ def test_explicit_shuffle_partitions_are_respected(spark):
 
 
 def test_correctness_and_perf_confs_applied(spark):
-    ensure_session_conf(spark)
-    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert spark.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
-    assert spark.conf.get("spark.sql.execution.pythonUDTF.arrow.enabled") == "true"
+    """Every conf the healer forces is set back to the engine's value
+    after a caller moved it away."""
+    moved = {
+        "spark.sql.session.timeZone": ("America/New_York", "UTC"),
+        "spark.sql.legacy.parquet.nanosAsLong": ("false", "true"),
+        "spark.sql.execution.arrow.pyspark.enabled": ("false", "true"),
+        "spark.sql.execution.pythonUDTF.arrow.enabled": ("false", "true"),
+    }
+    old = {k: spark.conf.get(k) for k in moved}
+    try:
+        for k, (hostile, _) in moved.items():
+            spark.conf.set(k, hostile)
+        ensure_session_conf(spark)
+        assert {k: spark.conf.get(k) for k in moved} == {
+            k: healed for k, (_, healed) in moved.items()
+        }
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_get_spark_reuse_keeps_explicit_shuffle_partitions(spark):
+    """get_spark on a live session returns it with the caller's
+    shuffle-partition count intact: getOrCreate re-applies every
+    runtime-settable builder option, so get_spark sets no count of its
+    own and leaves sizing to ensure_session_conf."""
+    from llm_batch_processor_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "37")
+        assert get_spark(app_name="reuse") is spark
+        assert spark.conf.get(key) == "37"
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_explicit_aqe_opt_out_survives_heal_and_load(spark):
@@ -84,7 +114,7 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
                 return s.map(lambda _: pkg.__name__)
 
             spark = get_spark(app_name="cwd-probe", master="local[1]",
-                              shuffle_partitions=1)
+                              extra_conf={{"spark.sql.shuffle.partitions": "1"}})
             package_name = F.pandas_udf(package_name, "string")
             row = spark.range(1).select(package_name(F.col("id").cast("string")))
             print("UDF:", row.first()[0])

@@ -9,8 +9,9 @@ runner for every hostile corpus (the builders in
 `ragged_dim_sweep.py`, `fuzz_corpus.py` and `build_rowperm` below),
 the execution-regime invariance sweeps, the stock driver-owned session
 and pristine: each row is one `tools/selfcheck.py` subprocess (own
-SparkSession — masters/confs can differ per row, and a row's `--conf`
-values hold for every query), and the matrix prints ROBUSTNESS.md-ready.
+SparkSession — a row's `--conf` values, `spark.master` included, are
+set when that session is built and hold for every query), and the
+matrix prints ROBUSTNESS.md-ready.
 
 One query on one corpus: call the builder, e.g.
 `build_nulls(SRC, Path(DIR))`, then
@@ -24,7 +25,8 @@ Expected state (276 queries):
                        KeyContractError, no free-floating divergences;
                        agg_approx_distinct is the one remaining
                        rows-only row there)
-  local4 / nobcast (no broadcast, AQE off) / nocodegen /
+  local4 (local[4] master, 7 shuffle partitions) /
+  nobcast (no broadcast, AQE off) / nocodegen /
   stock (Spark's stock confs, America/New_York TZ)        271/0/5/0
 
 Usage:
@@ -67,8 +69,7 @@ def _registry_size() -> int:
     return len(all_queries())
 
 
-def run_selfcheck(sf_dir: str, conf: list[str] | None = None,
-                  env: dict[str, str] | None = None, skip: str = "",
+def run_selfcheck(sf_dir: str, conf: list[str] | None = None, skip: str = "",
                   timeout_s: int | None = None) -> dict:
     """One selfcheck subprocess. ``skip`` passes an oracle-feasibility
     exclusion list through to selfcheck --skip (skipped names are
@@ -81,13 +82,10 @@ def run_selfcheck(sf_dir: str, conf: list[str] | None = None,
         cmd += ["--conf", kv]
     if skip:
         cmd += ["--skip", skip]
-    full_env = dict(os.environ)
-    full_env.update(env or {})
     t0 = time.time()
     try:
         proc = subprocess.run(
-            cmd, capture_output=True, text=True, cwd=str(REPO), env=full_env,
-            timeout=timeout_s,
+            cmd, capture_output=True, text=True, cwd=str(REPO), timeout=timeout_s,
         )
     except subprocess.TimeoutExpired as e:
         return {
@@ -308,8 +306,11 @@ def main() -> int:
         # oracle sites now json_valid-guarded (Spark's get_json_object
         # NULLs instead)
         "ragged": lambda: corpus_row(_build_ragged, args.sf),
+        # a narrower master with an odd shuffle-partition count: no
+        # result may lean on the task or partition layout
         "local4": lambda: run_selfcheck(
-            args.sf, env={"SPARK_MASTER": "local[4]", "SPARK_SHUFFLE_PARTITIONS": "7"}
+            args.sf,
+            conf=["spark.master=local[4]", "spark.sql.shuffle.partitions=7"],
         ),
         "nobcast": lambda: run_selfcheck(
             args.sf,
