@@ -114,7 +114,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from llm_batch_processor_spark.queries import all_queries
-    from llm_batch_processor_spark.session import get_spark
+    from llm_batch_processor_spark.session import get_spark, stop_spark
 
     spark = get_spark(app_name="bench")
     qs = all_queries()
@@ -225,7 +225,7 @@ def main() -> int:
     # round 3's ~2800-char cap still failed at 272 queries — the r04
     # tail started MID-JSON, so line + preamble exceeded the window.
     # Fix for real: the printed line carries only total + the top-20
-    # slowest queries (~1 KB), and it is emitted AFTER spark.stop() so
+    # slowest queries (~1 KB), and it is emitted AFTER stop_spark() so
     # it is the last stdout line — tail capture cannot decapitate it.
     # Full per-query detail goes to BENCH_FULL.json (committed).
     # Subset runs (--only, e.g. the pytest bench-contract test) must
@@ -274,7 +274,7 @@ def main() -> int:
         },
         separators=(",", ":"),
     )
-    spark.stop()
+    stop_spark(spark)
     print(line, flush=True)
     return 0
 

@@ -30,7 +30,7 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     args = ap.parse_args()
 
-    from llm_batch_processor_spark.session import get_spark
+    from llm_batch_processor_spark.session import get_spark, stop_spark
     from llm_batch_processor_spark.tables import load
 
     spark = get_spark(app_name="curate-corpus")
@@ -81,7 +81,7 @@ def main() -> int:
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
     ).orderBy("lang", "split").show(20, truncate=False)
-    spark.stop()
+    stop_spark(spark)
     return 0
 
 

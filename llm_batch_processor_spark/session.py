@@ -6,11 +6,17 @@ correctness harness) are instead *adjusted at runtime* via
 Both kinds of session get their shuffle-partition count from one rule,
 applied by :func:`ensure_session_conf`: a stock 200 becomes 2x the
 session's cores, and an explicitly set value is kept.
+
+Every session the engine owns (the CLI job's, bench.py's, the tools')
+ends through :func:`stop_spark`. A plain ``SparkSession.stop`` sits
+out the rest of PySpark's 1 s accumulator-server poll, about 0.9 s of
+idling that a per-invocation CLI job would pay once per job.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -81,18 +87,51 @@ def get_spark(
     that imports it also works when the driver runs from another
     directory. ``extra_conf`` is applied last and may override any of
     these, ``spark.master`` included.
+
+    The builder defaults above apply only when no session is active:
+    ``getOrCreate`` re-applies every runtime-settable builder option to
+    the live session it returns, so a reuse applies just ``extra_conf``
+    and a value the caller set (a broadcast threshold, a parquet codec)
+    survives.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
-    )
+    b = SparkSession.builder
+    if SparkSession.getActiveSession() is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+        b = (
+            b.appName(app_name)
+            .master(master or f"local[{cpus}]")
+            .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.parquet.compression.codec", "zstd")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     return ensure_session_conf(spark)
+
+
+def stop_spark(spark: SparkSession) -> None:
+    """Stop ``spark`` without waiting out PySpark's accumulator poll.
+
+    The accumulator server's handler polls the JVM's socket with a 1 s
+    ``select`` until the server is shut down, and its ``shutdown()``
+    sits out the rest of that poll. Nothing is pending by then: the JVM
+    waits for the handler's ack of every update before the job that
+    sent it returns. So the server comes off the context before the
+    stop and is shut down on a daemon thread afterwards. Its error hook
+    is silenced first: a JVM that exits inside the poll window makes
+    the handler hit EOF, and socketserver would print that traceback to
+    stderr, the CLI's error channel.
+    """
+    sc = spark.sparkContext
+    server = getattr(sc, "_accumulatorServer", None)
+    sc._accumulatorServer = None
+    if server is not None:
+        server.handle_error = lambda request, client_address: None
+    try:
+        spark.stop()
+    finally:
+        if server is not None:
+            threading.Thread(target=server.shutdown, daemon=True).start()

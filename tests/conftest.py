@@ -12,9 +12,16 @@ sys.path.insert(0, str(REPO))
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def run_query(spark, name):
+    """The registered query ``name`` built over the smoke-scale tables."""
+    from llm_batch_processor_spark.queries import all_queries
+
+    return all_queries()[name].fn(spark, SF_SMOKE)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    from llm_batch_processor_spark.session import get_spark
+    from llm_batch_processor_spark.session import get_spark, stop_spark
 
     spark = get_spark(
         app_name="pytest",
@@ -22,7 +29,7 @@ def spark():
         extra_conf={"spark.sql.shuffle.partitions": "8"},
     )
     yield spark
-    spark.stop()
+    stop_spark(spark)
 
 
 @pytest.fixture(scope="session")

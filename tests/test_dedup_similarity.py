@@ -20,6 +20,7 @@ from llm_batch_processor_spark.operators.dedup import (
 from llm_batch_processor_spark.operators.similarity import brute_force_topk, lsh_query_topk
 
 from conftest import SF_SMOKE as SF
+from conftest import run_query as _run
 
 DOCS = [
     # 0/1: identical; 2: one-token edit of 0; 3: unrelated; 4: near of 3
@@ -1228,3 +1229,14 @@ def test_cc_bcast_gate_shut_labels_identical(spark):
         for r in dedup.connected_components(pairs).collect()
     }
     assert bcast == exact
+
+
+def test_pq_codes_in_codebook_and_exact_for_centroids(spark):
+    rows = _run(spark, "embedding_pq_assign").collect()
+    assert all(0 <= r["code"] < 16 for r in rows)
+    assert all(r["sub"] in (0, 1) for r in rows)
+    # a codebook vector must be assigned to itself at distance 0
+    own = [r for r in rows if r["vec_id"] < 16]
+    assert own and all(
+        r["code"] == r["vec_id"] and r["d2"] == 0.0 for r in own
+    )

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_SMOKE
+from tests.conftest import run_query as _run
+
 I64MAX = 9223372036854775807
 
 
@@ -93,3 +96,17 @@ def test_table_diff_added_keys_total_at_rail(spark, tmp_path):
     assert added["n"] == 3
     assert added["min_key"] == 103 + 10000000
     assert 4611686018427387904 <= added["max_key"] < 4611686018427387904 + 10000001
+
+
+def test_table_diff_classes_partition_the_keyspace(spark):
+    from llm_batch_processor_spark.tables import load
+
+    rows = {r["class"]: r["n"] for r in _run(spark, "table_diff").collect()}
+    n_orders = load(spark, SF_SMOKE, "orders").count()
+    n_added = rows.get("added", 0)
+    # every original key is exactly one of removed/changed/unchanged
+    assert (
+        rows.get("removed", 0) + rows.get("changed", 0) + rows.get("unchanged", 0)
+        == n_orders
+    )
+    assert n_added >= 0

@@ -67,6 +67,28 @@ def test_get_spark_reuse_keeps_explicit_shuffle_partitions(spark):
         spark.conf.set(key, old)
 
 
+def test_get_spark_reuse_keeps_explicit_builder_confs(spark):
+    """get_spark on a live session keeps a broadcast threshold and a
+    parquet codec the caller set on it: the engine's builder defaults
+    apply only when the call creates the session, since getOrCreate
+    would re-apply them to the session it returns."""
+    from llm_batch_processor_spark.session import get_spark
+
+    moved = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.parquet.compression.codec": "snappy",
+    }
+    old = {k: spark.conf.get(k) for k in moved}
+    try:
+        for k, v in moved.items():
+            spark.conf.set(k, v)
+        assert get_spark(app_name="reuse") is spark
+        assert {k: spark.conf.get(k) for k in moved} == moved
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 def test_explicit_aqe_opt_out_survives_heal_and_load(spark):
     """A caller's AQE opt-out holds through ensure_session_conf and a
     table load (the healer forces only confs whose Spark default differs
@@ -107,7 +129,7 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
             sys.path.insert(0, {repo!r})
             import pandas as pd
             from pyspark.sql import functions as F
-            from llm_batch_processor_spark.session import get_spark
+            from llm_batch_processor_spark.session import get_spark, stop_spark
 
             def package_name(s: pd.Series) -> pd.Series:
                 import llm_batch_processor_spark as pkg
@@ -118,7 +140,7 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
             package_name = F.pandas_udf(package_name, "string")
             row = spark.range(1).select(package_name(F.col("id").cast("string")))
             print("UDF:", row.first()[0])
-            spark.stop()
+            stop_spark(spark)
             """
         )
     )
@@ -134,3 +156,67 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "UDF: llm_batch_processor_spark" in out.stdout
+
+
+def test_stop_spark_keeps_accumulators_and_stderr_clean(tmp_path):
+    """stop_spark ends a session whose Python UDF fed an accumulator, a
+    second session in the same process counts from a clean start, and
+    a JVM that exits right after the stop, inside the accumulator
+    server's poll window, prints no socketserver traceback to stderr."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    script = tmp_path / "driver.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            import time
+            sys.path.insert(0, {repo!r})
+            from pyspark import SparkContext
+            from pyspark.sql import functions as F
+            from llm_batch_processor_spark.session import get_spark, stop_spark
+
+            def counted_job():
+                spark = get_spark(app_name="stop-probe", master="local[2]",
+                                  extra_conf={{"spark.sql.shuffle.partitions": "2"}})
+                acc = spark.sparkContext.accumulator(0)
+
+                def bump(x):
+                    acc.add(1)
+                    return x
+
+                bump = F.udf(bump, "long")
+                spark.range(100).select(bump("id")).write.format("noop").mode("overwrite").save()
+                print("total:", acc.value, flush=True)
+                return spark
+
+            stop_spark(counted_job())
+            stop_spark(counted_job())
+            # end the JVM at once, as a process exit would
+            gateway = SparkContext._gateway
+            gateway.shutdown()
+            SparkContext._gateway = SparkContext._jvm = None
+            gateway.proc.stdin.close()
+            gateway.proc.wait(timeout=60)
+            time.sleep(1.5)
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.splitlines() == ["total: 100", "total: 100"]
+    assert "Exception occurred during processing of request" not in out.stderr

@@ -41,7 +41,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from llm_batch_processor_spark.queries import all_queries
-    from llm_batch_processor_spark.session import get_spark
+    from llm_batch_processor_spark.session import get_spark, stop_spark
 
     sf_dir = os.path.abspath(args.sf)
     sf_name = os.path.basename(sf_dir.rstrip("/"))
@@ -125,7 +125,7 @@ def main() -> int:
         print(f"  {r['sec']:8.1f}s {r['status']:7s} {n}")
     n_bad = sum(1 for r in results.values() if r["status"] != "ok")
     print(f"{len(results) - n_bad} ok, {n_bad} not-ok -> {out_path}")
-    spark.stop()
+    stop_spark(spark)
     return 0 if n_bad == 0 else 1
 
 

@@ -49,7 +49,7 @@ def main() -> int:
         whole_stage_codegen_count,
     )
     from llm_batch_processor_spark.queries import all_queries
-    from llm_batch_processor_spark.session import get_spark
+    from llm_batch_processor_spark.session import get_spark, stop_spark
 
     spark = get_spark(app_name="scale-audit")
     rows = []
@@ -117,7 +117,7 @@ def main() -> int:
         f"wrote {args.out}: {len(rows)} queries, row_py={total_row_py}, "
         f"nested_loop={nl}, sp_windows={spw}"
     )
-    spark.stop()
+    stop_spark(spark)
     return 0
 
 

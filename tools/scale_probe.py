@@ -203,7 +203,7 @@ def main() -> int:
     factor = (args.scale / args.baseline) if args.baseline else args.scale * 10
 
     from llm_batch_processor_spark.queries import all_queries
-    from llm_batch_processor_spark.session import get_spark
+    from llm_batch_processor_spark.session import get_spark, stop_spark
 
     spark = get_spark(app_name="scale_probe")
     qs = all_queries()
@@ -238,7 +238,7 @@ def main() -> int:
         ratio = t_big / max(t_small, 1e-9)
         print(f"{name:24s} {t_small:8.2f} {t_big:8.2f} {ratio:5.1f}x",
               flush=True)
-    spark.stop()
+    stop_spark(spark)
     return 0
 
 

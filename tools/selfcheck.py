@@ -136,7 +136,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as E
-    from llm_batch_processor_spark.session import get_spark
+    from llm_batch_processor_spark.session import get_spark, stop_spark
     from llm_batch_processor_spark.tables import TABLE_NAMES
 
     for kv in args.conf:
@@ -293,7 +293,7 @@ def main() -> int:
             json.dump(results, f, indent=1)
             f.write("\n")
         print(f"wrote {args.out} ({len(results)} queries)")
-    spark.stop()
+    stop_spark(spark)
     return 1 if n_fail else 0
 
 
